@@ -695,7 +695,7 @@ class _IceChangeStreamReader(_IceStreamReader):
 
 class _WriteMessage(WriterCommitMessage):
     def __init__(self, manifest: list):
-        self.manifest = manifest  # [(part, path, file_bytes, rows, stats_json)]
+        self.manifest = manifest  # _MANIFEST_SCHEMA-shaped dicts
 
 
 class _IceBatchWriter(DataSourceArrowWriter):
@@ -752,20 +752,20 @@ class _IceBatchWriter(DataSourceArrowWriter):
 
     def write(self, iterator: Iterator) -> WriterCommitMessage:
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        from .table import _PART_COL, _make_group_writer
+        from .table import _PART_COL, _make_group_writer, _write_arrow_groups
 
         batches = list(iterator)
-        manifest: list = []
         if not batches:
-            return _WriteMessage(manifest)
+            return _WriteMessage([])
         table = pa.Table.from_batches(batches)
         if "_partition" in table.column_names:
-            part_vals = table.column("_partition").to_pylist()
+            part = pc.fill_null(table.column("_partition").cast(pa.string()), "")
             if not self._preserve_partition:
                 table = table.drop_columns(["_partition"])
         else:
-            part_vals = [""] * table.num_rows
+            part = pa.array([""] * table.num_rows, type=pa.string())
         write_group = _make_group_writer(
             self._path,
             self._sort_order,
@@ -774,59 +774,40 @@ class _IceBatchWriter(DataSourceArrowWriter):
             stats_cols=self._stats_cols,
             bloom_spec=self._bloom_spec,
         )
-        by_part: dict[str, list[int]] = {}
-        for i, p in enumerate(part_vals):
-            by_part.setdefault(p if p is not None else "", []).append(i)
-        for part, idxs in sorted(by_part.items()):
-            sub = table.take(idxs) if len(idxs) < table.num_rows else table
-            sub = sub.append_column(
-                _PART_COL, pa.array([part] * sub.num_rows, type=pa.string())
-            )
-            m = write_group(sub)
-            manifest.append(
-                tuple(m.column(c)[0].as_py() for c in
-                      ("part", "path", "file_bytes", "rows", "stats"))
-            )
-        return _WriteMessage(manifest)
+        return _WriteMessage(
+            _write_arrow_groups(table.append_column(_PART_COL, part), write_group)
+        )
 
     # ---- driver side
 
     def commit(self, messages) -> None:
-        import json as _json
+        self._append(storage_for(self._log_path), messages)
 
-        from .log import FileMarker, unique_ms
+    def _append(self, store, messages, tag: Optional[str] = None) -> None:
+        """One log append of every executor's files, stamped now."""
+        from .log import unique_ms
+        from .table import _manifest_markers
 
-        markers = []
         ts = unique_ms()
-        for msg in messages:
-            if msg is None:
-                continue
-            for _part, path, file_bytes, _rows, stats in msg.manifest:
-                markers.append(
-                    FileMarker(
-                        path=path,
-                        created_ms=ts,
-                        file_bytes=file_bytes,
-                        stats=_json.loads(stats) if stats else None,
-                    )
-                )
+        markers = _manifest_markers(
+            [r for msg in messages if msg is not None for r in msg.manifest],
+            created_ms=ts,
+        )
         if not markers:
             return
         sch = Schema()
         cols = spark_schema_to_duckdb(StructType(self._data_fields))
         sch.accumulate(list(cols.keys()), list(cols.values()))
-        IceLogIO().append(
-            storage_for(self._log_path), 1, sch, markers, timestamp_ms=ts
-        )
+        IceLogIO().append(store, 1, sch, markers, timestamp_ms=ts, tag=tag)
 
     def abort(self, messages) -> None:
         store = storage_for(self._path)
         for msg in messages or []:
             if msg is None:
                 continue
-            for _part, path, *_rest in msg.manifest:
+            for r in msg.manifest:
                 try:
-                    store.delete(path)
+                    store.delete(r["path"])
                 except Exception:
                     pass
 
@@ -868,34 +849,11 @@ class _IceStreamBatchWriter(_IceBatchWriter, DataSourceStreamArrowWriter):
         return tag in seen
 
     def commit(self, messages, batchId: int) -> None:
-        import json as _json
-
-        from .log import FileMarker, unique_ms
-
         store = storage_for(self._log_path)
         tag = self._tag(batchId)
         if self._already_committed(store, tag):
             return  # replayed batch: files written are orphans, GC'd later
-        markers = []
-        ts = unique_ms()
-        for msg in messages:
-            if msg is None:
-                continue
-            for _part, path, file_bytes, _rows, stats in msg.manifest:
-                markers.append(
-                    FileMarker(
-                        path=path,
-                        created_ms=ts,
-                        file_bytes=file_bytes,
-                        stats=_json.loads(stats) if stats else None,
-                    )
-                )
-        if not markers:
-            return
-        sch = Schema()
-        cols = spark_schema_to_duckdb(StructType(self._data_fields))
-        sch.accumulate(list(cols.keys()), list(cols.values()))
-        IceLogIO().append(store, 1, sch, markers, timestamp_ms=ts, tag=tag)
+        self._append(store, messages, tag=tag)
         getattr(self, "_seen", set()).add(tag)
 
     def abort(self, messages, batchId: int) -> None:

@@ -23,9 +23,11 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..table import IceTable
 from .hashing import hash60
 
 HYPERPLANE_SEED = 4_242
@@ -202,7 +204,7 @@ def cosine_topk(
         # the pruner's fixed job cost (measured at sf0.1: 0.78 s plain
         # vs 1.1 s pruned in a loaded session; at 10x the rows the
         # pruned path wins 3x). Unknown estimates prune — scale-safe.
-        est = _plan_est_bytes(corpus)
+        est = IceTable._estimated_bytes(corpus)
         if est is None or est > int(
             os.environ.get("SPARK_GRAFT_TOPK_PRUNE_BYTES", str(4 << 20))
         ):
@@ -331,9 +333,6 @@ def ivf_codebook_rows(
         .limit(n_centroids)
         .select(F.col("id").alias("cid"), F.col("dv").alias("cv"))
     )
-    # n_centroids x dim doubles by construction: committing this through
-    # IceTable.insert takes the driver-local small-batch write
-    out._icedb_small_batch = True
     return out
 
 
@@ -375,11 +374,14 @@ def ivf_index_rows(
         )
         .select("vec_id", "cell", "v", "n")
     )
-    # size hint for the insert fast path: output is exactly one row per
-    # corpus vector at ~input width (+ one long), so 2x the corpus
-    # projection's estimate is an honest upper bound — the plan's own
-    # estimate is C-times inflated by the crossJoin
-    est = _plan_est_bytes(v)
+    # size hint for IceTable.insert's write-path gate: output is one row
+    # per corpus vector at ~input width (+ one long), so 2x the corpus
+    # projection's estimate sizes it in the optimizer's units — the
+    # plan's own estimate is C-times inflated by the crossJoin. Not a
+    # bound on decoded bytes: the optimizer prices an array at a default
+    # width (measured: a 256,000 B hint for 2,160,000 B of Arrow data, a
+    # 4,000 x 64 float32 corpus built from a pyarrow Table)
+    est = IceTable._estimated_bytes(v)
     if est is not None:
         out._icedb_est_bytes = 2 * est
     return out
@@ -490,20 +492,6 @@ def cosine_topk_against_index_table(
     return scored.withColumn("rank", F.row_number().over(w)).where(
         F.col("rank") <= k
     )
-
-
-def _plan_est_bytes(df: DataFrame):
-    """Optimizer size estimate (free — no job), or None on the
-    un-estimable sentinel. Used to pass an HONEST size hint to
-    ``IceTable.insert`` for index-row relations whose own post-crossJoin
-    estimate is wildly pessimistic (the C-way crossJoin multiplies the
-    estimate by C even though the following groupBy collapses it back to
-    one row per corpus vector)."""
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
-    return est if 0 < est < 1 << 60 else None
 
 
 def _training_view(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -657,17 +645,20 @@ def _train_codebook(
             q = (20 * abs(S) + n) // (2 * n)
             return (1.0 if S > 0 else -1.0) * (q / 10000.0)
         # materialize THIS iteration: the next one (and every downstream
-        # use) starts from a literal local relation, not the Lloyd plan
+        # use) starts from a literal local relation, not the Lloyd plan.
+        # Built from Arrow (float64 lists hold the Python floats exactly),
+        # so the relation is a LocalRelation with a size estimate — a
+        # parallelized row list would report the Long.MaxValue sentinel
+        items = sorted(acc.items())
         cents = v.sparkSession.createDataFrame(
-            [
-                (cid, [_coord(s[i], n) for i in range(dim)])
-                for cid, (n, s) in sorted(acc.items())
-            ],
-            "cid bigint, cv array<double>",
-        )  # no coalesce(1): sequential per-slice Python-worker round trips
-    # C x dim doubles by construction: committing this through
-    # IceTable.insert takes the driver-local small-batch write
-    cents._icedb_small_batch = True
+            pa.table({
+                "cid": pa.array([cid for cid, _ in items], pa.int64()),
+                "cv": pa.array(
+                    [[_coord(s[i], n) for i in range(dim)] for _, (n, s) in items],
+                    pa.list_(pa.float64()),
+                ),
+            })
+        )
     return cents
 
 
@@ -1281,9 +1272,6 @@ def pq_subcodebook_rows(
         )
         .withColumn("c2", _dot(F.col("scv"), F.col("scv")))
     )
-    # m_sub x k_sub rows of dim/m_sub doubles by construction: committing
-    # this through IceTable.insert takes the driver-local small-batch write
-    out._icedb_small_batch = True
     return out
 
 
@@ -1376,11 +1364,11 @@ def ivfpq_index_rows(
         ).alias("codes"),
         F.sum("c2c").alias("r2"),
     )
-    # size hint for the insert fast path: one 4-fixed-width-column row
-    # per corpus vector (~32 B) — the corpus projection's estimate is a
-    # generous upper bound; the plan's own estimate carries the
-    # crossJoin/explode inflation
-    est = _plan_est_bytes(v)
+    # size hint for IceTable.insert's write-path gate: one
+    # 4-fixed-width-column row per corpus vector (~32 B), sized by the
+    # corpus projection's estimate (optimizer units, see ivf_index_rows)
+    # — the plan's own estimate carries the crossJoin/explode inflation
+    est = IceTable._estimated_bytes(v)
     if est is not None:
         out._icedb_est_bytes = est
     return out

@@ -9,11 +9,17 @@ PUT after all data files land).
 
 Scale design notes (targeting a 1000-executor cluster, not local mode):
 
-* **Insert** is a single Spark job: ``groupBy(partition).applyInArrow(write)``.
-  One shuffle on the partition key, then each task writes exactly one Parquet
-  file for its partition (sorted by the table sort order) directly to final
-  storage and returns a 1-row manifest — so the driver collects only
-  ``O(partitions)`` rows, never data. Arrow end to end; no Python row loop.
+* **Every data write** (insert, merge, GDPR rewrite, DML rewrite) goes
+  through ``IceTable._write_groups``, which picks one of two paths by a
+  single size gate. Above the ceiling — 32 MB of on-disk bytes when the write
+  lands in one known partition, 8 MB when it may fan out — it is one Spark
+  job, ``groupBy(partition).applyInArrow(write)``: one shuffle on the
+  partition key, then each task writes exactly one Parquet file for its
+  partition (sorted by the table sort order) directly to final storage and
+  returns a 1-row manifest, so the driver collects only ``O(partitions)``
+  rows, never data. At or below it, the batch collects to one Arrow table
+  and the same group writer runs on the driver, skipping the shuffle and
+  the Python-worker round trip. Arrow end to end; no Python row loop.
 * **Reads** pass an explicit alive-file list to the Parquet reader with the
   unified log schema, so Catalyst gets column pruning + filter pushdown for
   free, and MVCC/time-travel file pruning happens driver-side before the scan
@@ -29,6 +35,7 @@ from __future__ import annotations
 
 import functools
 import json
+import logging
 import os
 import re
 import threading
@@ -41,6 +48,7 @@ from typing import NamedTuple, Callable, Iterable, Optional, Union
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -63,6 +71,8 @@ from .types import (
     duckdb_schema_to_spark,
     spark_schema_to_duckdb,
 )
+
+_LOG = logging.getLogger(__name__)
 
 # gc_orphans deletes unreferenced data files by age; below this grace a
 # live writer's not-yet-committed file is at real risk (and driver-vs-store
@@ -371,33 +381,62 @@ def parse_partition(part: str) -> dict[str, str]:
 # distributed writer's fixed cost (shuffle stage + Python-worker round trip,
 # ~0.5 s even for a 16-row codebook) dwarfs a single-threaded Arrow write of
 # a batch this small on any hardware, so the cutoff is scale-independent.
+# A parallelized row list has no optimizer estimate (it reports the
+# Long.MaxValue sentinel), so rows are sized by count, not bytes.
 _SMALL_BATCH_ROWS = 10_000
 
+# Driver-local write ceilings (optimization r13). A write whose size is at
+# or below its ceiling collects to one Arrow table and runs the group
+# writer on the driver instead of a shuffle + Python-worker job. The size
+# is the caller's known on-disk bytes (merge source markers, the GDPR
+# source file) or else the optimizer estimate, which for a Parquet scan is
+# on-disk bytes too (fileCompressionFactor 1.0) — so both ceilings are in
+# ON-DISK bytes, and a highly compressible input can decode far larger.
+# That case is what spark.driver.maxResultSize catches: the collect aborts
+# and the write falls back to the distributed writer. Gating on decoded
+# size would need a row count in the file marker (a log-format change).
+#
+# One known partition (merge, GDPR rewrite, pinned DML rewrite): one output
+# file, and a 32 MB collect is driver-safe on any cluster.
+_LOCAL_PART_BYTES = 32 << 20
+# A write that may fan out to many partitions (insert, unpinned DML): the
+# distributed writer handles partitions in parallel — measured: a 1 M-row
+# / 100-partition / ~32 MB batch writes in 1.2 s distributed vs 5 s
+# driver-local, while sub-8 MB batches win locally.
+_LOCAL_FANOUT_BYTES = 8 << 20
+# write_splits="auto": one writer task per this many estimated bytes.
+_WRITE_SPLIT_BYTES = 8 << 20
 
-def _local_write_bytes() -> int:
-    """Size ceiling (optimizer-estimated or marker-known input bytes)
-    below which a write takes the DRIVER-LOCAL fast path — one Arrow
-    collect + the same group writer on the driver instead of a shuffle +
-    Python-worker job (optimization r13, extending the r12 small-batch
-    path). Scale-adaptive by BYTES, never by core count: on a cluster a
-    32 MB collect is trivially driver-safe, and anything larger keeps
-    the distributed writer. Mis-estimates are bounded by
-    spark.driver.maxResultSize (the collect aborts, the caller falls
-    back to the distributed writer)."""
-    return int(os.environ.get("SPARK_GRAFT_LOCAL_WRITE_BYTES", str(32 << 20)))
+
+def _result_size_exceeded(exc: Py4JJavaError) -> bool:
+    """True when ``exc`` is the failure the driver-local write falls back
+    on: a SparkException whose cause chain names
+    ``spark.driver.maxResultSize`` (the collect outgrew the driver's
+    result-size limit). Every other failure — including Arrow conversion
+    errors, which the distributed writer hits identically — propagates."""
+    j = exc.java_exception
+    while j is not None:
+        if j.getClass().getName() == "org.apache.spark.SparkException" and (
+            "spark.driver.maxResultSize" in str(j.getMessage())
+        ):
+            return True
+        j = j.getCause()
+    return False
 
 
-def _local_insert_bytes() -> int:
-    """Tighter ceiling for ESTIMATE-gated inserts and DML rewrites.
-    Unlike a merge (one partition, one output file), an insert may fan
-    out to many partitions the distributed writer handles in parallel —
-    measured: a 1 M-row / 100-partition / ~32 MB batch writes in 1.2 s
-    distributed vs 5 s driver-local, while sub-8 MB batches win locally.
-    Capped by the main ceiling."""
-    return min(
-        _local_write_bytes(),
-        int(os.environ.get("SPARK_GRAFT_LOCAL_INSERT_BYTES", str(8 << 20))),
-    )
+def _manifest_markers(manifest, created_ms: int = 0) -> list[FileMarker]:
+    """Group-writer manifest rows (dicts or collected Rows shaped like
+    ``_MANIFEST_SCHEMA``) as file markers stamped ``created_ms`` — 0 for
+    markers the caller stamps at commit."""
+    return [
+        FileMarker(
+            path=r["path"],
+            created_ms=created_ms,
+            file_bytes=r["file_bytes"],
+            stats=json.loads(r["stats"]) if r["stats"] else None,
+        )
+        for r in manifest
+    ]
 
 
 def _make_group_writer(
@@ -492,6 +531,33 @@ def _make_group_writer(
         )
 
     return write_group
+
+
+def _write_arrow_groups(tbl: pa.Table, writer) -> list[dict]:
+    """Split an Arrow table on ``_PART_COL`` and run ``writer`` (a
+    :func:`_make_group_writer` closure) once per partition — the same
+    groups ``groupBy(_PART_COL).applyInArrow(writer)`` forms, so the files
+    are identical; only where the writer runs differs. Returns manifest
+    dicts shaped like ``_MANIFEST_SCHEMA`` rows. Used on the driver by the
+    local write path and on executors by the ``format("icedb")`` writer."""
+    import pyarrow.compute as pc
+
+    if tbl.num_rows == 0:
+        return []
+    part_col = tbl.column(_PART_COL)
+    parts = pc.unique(part_col).to_pylist()
+    if len(parts) == 1:
+        return [writer(tbl).to_pylist()[0]]
+    parts.sort(key=lambda x: (x is None, x))
+    # vectorized masks (a per-row Python comparison list was O(rows x
+    # partitions) — measured as the ingest collapse when the estimate gate
+    # briefly admitted 1 M-row batches)
+    return [
+        writer(
+            tbl.filter(pc.is_null(part_col) if p is None else pc.equal(part_col, p))
+        ).to_pylist()[0]
+        for p in parts
+    ]
 
 
 class StagedInsert(NamedTuple):
@@ -853,8 +919,8 @@ class IceTable:
     def _resolve_write_splits(self, df: DataFrame) -> int:
         """Per-batch effective write fan-out. ``"auto"`` derives it from
         the optimizer's size estimate for the batch (free — no job):
-        one writer task per ``SPARK_GRAFT_WRITE_SPLIT_BYTES`` (default
-        8 MB of estimated input), capped at ``defaultParallelism`` so the
+        one writer task per ``_WRITE_SPLIT_BYTES`` (8 MB of estimated
+        input), capped at ``defaultParallelism`` so the
         cap grows with the cluster, floored at 1 so small batches keep
         the reference's one-file-per-partition layout. The bottleneck
         this sizes for is the writer task PIPELINE (shuffle fetch + JVM
@@ -866,11 +932,8 @@ class IceTable:
         est = self._estimated_bytes(df)
         if est is None:
             return 1
-        target = int(
-            os.environ.get("SPARK_GRAFT_WRITE_SPLIT_BYTES", str(8 << 20))
-        )
         par = self.spark.sparkContext.defaultParallelism
-        return max(1, min((est + target - 1) // target, par))
+        return max(1, min(-(-est // _WRITE_SPLIT_BYTES), par))
 
     @staticmethod
     def _estimated_bytes(df: DataFrame) -> Optional[int]:
@@ -949,7 +1012,6 @@ class IceTable:
         df: Optional[DataFrame] = None,
         commit_tag: Optional[str] = None,
         publish: bool = True,
-        small: Optional[bool] = None,
     ) -> "list[FileMarker] | StagedInsert":
         """Write one sorted Parquet file per touched partition, then commit
         with a single log append (reference ``insert``,
@@ -969,52 +1031,35 @@ class IceTable:
         window, like any in-flight writer. Returns a :class:`StagedInsert`
         instead of the marker list.
 
-        ``small`` opts a batch into the DRIVER-LOCAL write fast path: the
-        prepared batch is collected to one Arrow table and the exact same
-        group writer runs on the driver — one lightweight collect job
-        instead of a shuffle + Python-worker job, identical files, markers
-        and commit. ``None`` (default) auto-decides: the rows path takes
-        it below ``_SMALL_BATCH_ROWS`` input rows, the df path when the
-        relation is driver-local or tagged ``_icedb_small_batch`` by an
-        operator whose output is structurally tiny (codebooks). Pass
-        ``True`` only for batches you know fit in driver memory; a custom
-        insert query disables the auto path (its SQL may expand the batch
-        arbitrarily) but honors an explicit ``True``.
+        Small batches write on the driver (see :meth:`_write_groups`):
+        up to ``_SMALL_BATCH_ROWS`` row dicts, or a prepared batch (after
+        any custom insert query) whose size estimate is at most
+        ``_LOCAL_FANOUT_BYTES``.
         """
+        nbytes = None
         if df is None:
             if not rows:
                 return []
             if self.format_row:
                 rows = [self.format_row(dict(r)) for r in rows]
-            if small is None and len(rows) <= _SMALL_BATCH_ROWS:
-                # never auto-override an explicit fan-out request
-                small = not self.custom_insert_query and (
-                    self.write_splits in (1, "auto")
-                )
             df = self.spark.createDataFrame(rows)
             # NOTE: do NOT coalesce(1) here. The parallelized Python list
             # is a pickled RDD; coalescing makes one task iterate every
             # parent slice SEQUENTIALLY, each paying a Python-worker round
             # trip (measured 0.3 s -> 4.4 s per tiny insert). The plain
-            # parallel collect in _write_batch_local is the fast shape.
-        if small is None:
-            eligible = (
-                not self.custom_insert_query
-                and self.write_splits in (1, "auto")
-            )
-            small = eligible and bool(
-                getattr(df, "_icedb_small_batch", False) or df.isLocal()
-            )
-            if eligible and not small:
-                # optimization r13: lazy plans with a trustworthy SMALL
-                # optimizer estimate also go driver-local — the estimate
-                # is free, a wrong-low one is caught by the collect's
-                # result-size limit and falls back to the distributed
-                # writer (same failure contract as the tagged path)
-                est = getattr(df, "_icedb_est_bytes", None)
-                if est is None:
-                    est = self._estimated_bytes(df)
-                small = est is not None and est <= _local_insert_bytes()
+            # parallel collect of the local write is the fast shape.
+            if len(rows) <= _SMALL_BATCH_ROWS and not self.custom_insert_query:
+                nbytes = 0  # sized by row count: admitted under any ceiling
+        elif not self.custom_insert_query:
+            # An operator may size its output with ``_icedb_est_bytes``
+            # when the plan's own estimate is wildly off (the IVF/PQ index
+            # rows: a C-way crossJoin multiplies it by C although the
+            # groupBy after it collapses back to one row per vector).
+            # Without a hint the gate estimates the prepared batch, whose
+            # optimized plan the collect then reuses; estimating this
+            # relation too would cost a second optimizer pass (measured
+            # ~80 ms on a 40,000-row local relation).
+            nbytes = getattr(df, "_icedb_est_bytes", None)
         if self.constraints:
             df = self._enforce_constraints(df)
         df = self._prepare_batch(df)
@@ -1024,54 +1069,12 @@ class IceTable:
         cols = spark_schema_to_duckdb(T.StructType(data_fields))
         batch_schema.accumulate(list(cols.keys()), list(cols.values()))
 
-        df, sort_cols = self._apply_layout(df)
-        writer = _make_group_writer(
-            self.path, sort_cols, self.compression, self.row_group_size,
-            stats_cols=self._stats_cols(),
-            bloom_spec=self._bloom_spec(),
-            fs_options=self.storage_options,
+        written = self._write_groups(
+            df, nbytes=nbytes, splits=self._resolve_write_splits(df)
         )
-        group_cols = [_PART_COL]
-        cached = None
-        splits = 1 if small else self._resolve_write_splits(df)
-        if splits > 1:
-            if sort_cols == [_ZORDER_COL]:
-                # the z-range split needs a quantile pass BEFORE the
-                # write job — persist so the caller's (possibly
-                # expensive) upstream pipeline runs once, not twice
-                cached = df = df.persist()
-            df = self._attach_split(df, sort_cols, splits)
-            group_cols.append(_SPLIT_COL)
-        try:
-            manifest = None
-            if small and splits == 1:
-                try:
-                    manifest = self._write_batch_local(df, writer)
-                except Exception:
-                    # Fall back to the distributed writer (e.g. a type the
-                    # driver-side Arrow collect can't convert). Any files a
-                    # partial local attempt wrote are unreferenced — the log
-                    # commit below is the only visibility — and gc_orphans
-                    # collects them like any failed writer's.
-                    manifest = None
-            if manifest is None:
-                manifest = (
-                    df.groupBy(*group_cols)
-                    .applyInArrow(writer, schema=_MANIFEST_SCHEMA)
-                    .collect()
-                )
-        finally:
-            if cached is not None:
-                cached.unpersist()
         ts = unique_ms()
         markers = [
-            FileMarker(
-                path=r["path"],
-                created_ms=ts,
-                file_bytes=r["file_bytes"],
-                stats=json.loads(r["stats"]) if r["stats"] else None,
-            )
-            for r in manifest
+            FileMarker(m.path, ts, m.file_bytes, stats=m.stats) for m in written
         ]
         if not publish:
             return StagedInsert(markers=markers, schema=batch_schema)
@@ -1082,32 +1085,83 @@ class IceTable:
             )
         return markers
 
-    def _write_batch_local(self, df: DataFrame, writer) -> list[dict]:
-        """Driver-side half of the small-batch insert fast path: collect
-        the prepared batch (one single-partition job — for a local
-        relation there is nothing to shuffle and no Python worker to
-        spin up), group by partition in Arrow, and run the SAME
-        ``write_group`` closure per group that ``applyInArrow`` runs on
-        executors — identical sort, stats, Bloom and file bytes; only
-        WHERE the writer runs differs. Returns manifest dicts shaped
-        like the collected ``_MANIFEST_SCHEMA`` rows. (No coalesce(1):
-        it would collapse a tagged lazy plan's upstream scan into one
-        task; the plain collect keeps upstream parallelism.)"""
-        import pyarrow.compute as pc
+    def _write_groups(
+        self,
+        df: DataFrame,
+        *,
+        part: Optional[str] = None,
+        nbytes: Optional[int] = None,
+        splits: int = 1,
+    ) -> list[FileMarker]:
+        """The one data-write path: lay ``df`` out, write one sorted
+        Parquet file per ``_PART_COL`` group (per split group when
+        ``splits > 1``) and return UNSTAMPED markers — callers stamp
+        ``created_ms`` at commit, so visibility stays the log append.
 
-        tbl = df.toArrow()
-        if tbl.num_rows == 0:
-            return []
-        part_col = tbl.column(_PART_COL)
-        parts = set(part_col.to_pylist())
-        manifest = []
-        for p in sorted(parts, key=lambda x: (x is None, x)):
-            # vectorized mask (the former per-row Python comparison list
-            # was O(rows x partitions) — measured as the ingest collapse
-            # when the estimate gate briefly admitted 1 M-row batches)
-            mask = pc.is_null(part_col) if p is None else pc.equal(part_col, p)
-            manifest.append(writer(tbl.filter(mask)).to_pylist()[0])
-        return manifest
+        ``part`` places every row in that one partition (merge, GDPR and
+        pinned DML rewrites); otherwise ``df`` carries ``_PART_COL``.
+
+        Path choice: a single-split write whose size — ``nbytes`` when the
+        caller knows it, else the optimizer estimate — is at most
+        ``_LOCAL_PART_BYTES`` (one known partition) or
+        ``_LOCAL_FANOUT_BYTES`` (may fan out) collects to one Arrow table
+        and runs the SAME group writer on the driver, skipping the
+        shuffle + Python-worker job; files, stats and Blooms are
+        identical. Anything else, and a local collect that outgrows
+        ``spark.driver.maxResultSize``, runs
+        ``groupBy(...).applyInArrow(writer)`` on the executors. Any other
+        failure propagates; files a failed write left behind are
+        unreferenced, and ``gc_orphans`` collects them."""
+        df, sort_cols = self._apply_layout(df)
+        writer = _make_group_writer(
+            self.path, sort_cols, self.compression, self.row_group_size,
+            stats_cols=self._stats_cols(),
+            bloom_spec=self._bloom_spec(),
+            fs_options=self.storage_options,
+        )
+        if splits == 1:
+            size = nbytes if nbytes is not None else self._estimated_bytes(df)
+            ceiling = _LOCAL_FANOUT_BYTES if part is None else _LOCAL_PART_BYTES
+            if size is not None and size <= ceiling:
+                try:
+                    tbl = df.toArrow()
+                except Py4JJavaError as exc:
+                    if not _result_size_exceeded(exc):
+                        raise
+                    _LOG.warning(
+                        "driver-local write of %s (%d bytes) exceeded "
+                        "spark.driver.maxResultSize; using the distributed "
+                        "writer", self.path, size, exc_info=exc,
+                    )
+                else:
+                    if part is not None:
+                        # appended in Arrow: a literal column in the JVM
+                        # plan slows the collect (measured +40% on 20k rows)
+                        col = pa.array([part] * tbl.num_rows, pa.string())
+                        tbl = tbl.append_column(_PART_COL, col)
+                    return _manifest_markers(_write_arrow_groups(tbl, writer))
+        if part is not None:
+            df = df.withColumn(_PART_COL, F.lit(part))
+        group_cols = [_PART_COL]
+        cached = None
+        if splits > 1:
+            if sort_cols == [_ZORDER_COL]:
+                # the z-range split needs a quantile pass BEFORE the
+                # write job — persist so the caller's (possibly
+                # expensive) upstream pipeline runs once, not twice
+                cached = df = df.persist()
+            df = self._attach_split(df, sort_cols, splits)
+            group_cols.append(_SPLIT_COL)
+        try:
+            manifest = (
+                df.groupBy(*group_cols)
+                .applyInArrow(writer, schema=_MANIFEST_SCHEMA)
+                .collect()
+            )
+        finally:
+            if cached is not None:
+                cached.unpersist()
+        return _manifest_markers(manifest)
 
     def publish(
         self,
@@ -2392,47 +2446,16 @@ class IceTable:
             T.StructType([f for f in out.schema.fields if f.name != _PART_COL])
         )
 
-        out, sort_cols = self._apply_layout(out)
-        writer = _make_group_writer(
-            self.path, sort_cols, self.compression, self.row_group_size,
-            stats_cols=self._stats_cols(),
-            bloom_spec=self._bloom_spec(),
-            fs_options=self.storage_options,
+        # the input's on-disk bytes are KNOWN from the markers (free); a
+        # custom merge query may expand the batch, so it is sized by its
+        # plan estimate instead. MOR folds only delete rows (output <=
+        # input) and keep the marker bytes.
+        written = self._write_groups(
+            out, part=part,
+            nbytes=None if self.custom_merge_query
+            else sum(m.file_bytes for m in acc),
         )
-        manifest = None
-        if (
-            not self.custom_merge_query
-            and sum(m.file_bytes for m in acc) <= _local_write_bytes()
-        ):
-            # optimization r13: the merge's input size is KNOWN from the
-            # markers (free), so a small rewrite collects via Arrow and
-            # runs the SAME write_group on the driver — identical sort,
-            # stats, Bloom and file bytes; skips the shuffle + Python-
-            # worker task whose serial pipeline dominates small merges.
-            # A custom merge query may expand the batch, so it keeps the
-            # distributed writer; MOR folds only delete rows (output ≤
-            # input) and stay eligible. Any failure falls back — partial
-            # local files are unreferenced (commit-is-visibility) and
-            # gc_orphans collects them.
-            try:
-                tbl = out.toArrow()
-                if tbl.num_rows:
-                    tbl = tbl.append_column(
-                        _PART_COL, pa.array([part] * tbl.num_rows, pa.string())
-                    )
-                    manifest = [writer(tbl).to_pylist()[0]]
-                else:
-                    manifest = []
-            except Exception:
-                manifest = None
-        if manifest is None:
-            manifest = (
-                out.withColumn(_PART_COL, F.lit(part))
-                .groupBy(_PART_COL)
-                .applyInArrow(writer, schema=_MANIFEST_SCHEMA)
-                .collect()
-            )
-        if not manifest:
+        if not written:
             # a filtering custom merge query can yield ZERO rows for the
             # partition (TTL-style 'where not expired'): applyInArrow emits
             # no group, so write the empty-but-schema'd parquet ourselves —
@@ -2451,7 +2474,7 @@ class IceTable:
                 else None
             )
             return rel, len(buf.getvalue()), out_cols, stats0
-        stats = json.loads(manifest[0]["stats"]) if manifest[0]["stats"] else None
+        stats = written[0].stats
         if sets:
             # record the fold: these rows can never need the applied sets
             # again (vacuum uses this to prove a set obsolete — the new
@@ -2459,12 +2482,7 @@ class IceTable:
             # so created_ms alone cannot)
             stats = dict(stats or {})
             stats[self._MOR_STATS_KEY] = max(ts for ts, _p in sets)
-        return (
-            manifest[0]["path"],
-            manifest[0]["file_bytes"],
-            out_cols,
-            stats,
-        )
+        return written[0].path, written[0].file_bytes, out_cols, stats
 
     def _commit_merge(
         self, state: LogState, rewritten: list
@@ -2974,7 +2992,7 @@ class IceTable:
         known = set(state.schema.columns().keys())
         targets = [m for m in state.alive_files() if m.partition() == partition]
 
-        def rewrite_one(m: FileMarker) -> list[tuple[str, int]]:
+        def rewrite_one(m: FileMarker) -> list[FileMarker]:
             df = self._scan_paths([self.storage.absolute(m.path)], schema)
             with _VIEW_LOCK:
                 df.createOrReplaceTempView("_rows")
@@ -2984,43 +3002,13 @@ class IceTable:
                 raise ValueError(
                     f"rewrite query may not add columns; got new columns {extra}"
                 )
-            out, sort_cols = self._apply_layout(out)
-            writer = _make_group_writer(
-                self.path, sort_cols, self.compression, self.row_group_size,
-                stats_cols=self._stats_cols(),
-                bloom_spec=self._bloom_spec(),
-                fs_options=self.storage_options,
-            )
-            manifest = None
-            if m.file_bytes <= _local_write_bytes():
-                # optimization r13: per-file GDPR rewrites are bounded by
-                # the SOURCE file's known bytes — small ones collect via
-                # Arrow and write on the driver (the filter query only
-                # removes/edits rows within the file's schema)
-                try:
-                    tbl = out.withColumn(_PART_COL, F.lit(partition)).toArrow()
-                    manifest = [writer(tbl).to_pylist()[0]] if tbl.num_rows else []
-                except Exception:
-                    manifest = None
-            if manifest is None:
-                manifest = (
-                    out.withColumn(_PART_COL, F.lit(partition))
-                    .groupBy(_PART_COL)
-                    .applyInArrow(writer, schema=_MANIFEST_SCHEMA)
-                    .collect()
-                )
-            return [
-                (
-                    r["path"],
-                    r["file_bytes"],
-                    json.loads(r["stats"]) if r["stats"] else None,
-                )
-                for r in manifest
-            ]
+            # sized by the SOURCE file's known bytes: the filter query only
+            # removes/edits rows within the file's schema
+            return self._write_groups(out, part=partition, nbytes=m.file_bytes)
 
         from concurrent.futures import ThreadPoolExecutor
 
-        new_files: list[tuple[str, int, Optional[dict]]] = []
+        new_files: list[FileMarker] = []
         rewritten: list[str] = []
         with ThreadPoolExecutor(max_workers=max(1, concurrency)) as ex:
             for m, files in zip(targets, ex.map(rewrite_one, targets)):
@@ -3031,7 +3019,9 @@ class IceTable:
         # returns for instants during the rewrite (insert and _commit_merge
         # both stamp at commit)
         ts = unique_ms()
-        new_markers = [FileMarker(p, ts, b, stats=st) for p, b, st in new_files]
+        new_markers = [
+            FileMarker(m.path, ts, m.file_bytes, stats=m.stats) for m in new_files
+        ]
         tombstoned = [
             FileMarker(m.path, m.created_ms, m.file_bytes, ts, m.stats)
             for m in targets
@@ -3073,44 +3063,11 @@ class IceTable:
         partition (delete: values unchanged); otherwise placement is
         recomputed so updated/merged rows migrate to the partition their
         new values imply."""
-        if pin_partition is not None:
-            df = df.withColumn(_PART_COL, F.lit(pin_partition))
-        elif _PART_COL not in df.columns:
+        if pin_partition is None and _PART_COL not in df.columns:
             # a pre-attached _PART_COL (distributed DML maps placement from
             # each row's source-file path) is honored as-is
             df = self._attach_partition(df)
-        df, sort_cols = self._apply_layout(df)
-        writer = _make_group_writer(
-            self.path, sort_cols, self.compression, self.row_group_size,
-            stats_cols=self._stats_cols(),
-            bloom_spec=self._bloom_spec(),
-            fs_options=self.storage_options,
-        )
-        manifest = None
-        est = self._estimated_bytes(df)
-        if est is not None and est <= _local_insert_bytes():
-            # optimization r13: small DML rewrites (estimate-gated, same
-            # contract as insert's fast path) collect via Arrow and run
-            # the same group writer on the driver — skipping the shuffle
-            # + Python-worker job per rewrite. Failures fall back; local
-            # partials are unreferenced until the commit.
-            try:
-                manifest = self._write_batch_local(df, writer)
-            except Exception:
-                manifest = None
-        if manifest is None:
-            manifest = (
-                df.groupBy(_PART_COL)
-                .applyInArrow(writer, schema=_MANIFEST_SCHEMA)
-                .collect()
-            )
-        return [
-            FileMarker(
-                r["path"], 0, r["file_bytes"],
-                stats=json.loads(r["stats"]) if r["stats"] else None,
-            )
-            for r in manifest
-        ]
+        return self._write_groups(df, part=pin_partition)
 
     _CHANGES_PREFIX = "_changes"
 

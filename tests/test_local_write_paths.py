@@ -1,57 +1,39 @@
-"""Driver-local write fast paths for merges, DML rewrites and
-estimate-gated inserts (optimization r13, extending the r12 small-batch
-insert path).
+"""The one data-write path, ``IceTable._write_groups``.
 
-A small merge/rewrite used to pay a shuffle stage + Python-worker round
-trip for a write whose input bytes are KNOWN (merge: marker bytes;
-rewrite_partition: the source file's bytes) or cheaply estimated (DML
-rewrites, scan-backed inserts). The fast path collects via Arrow and runs
-the SAME ``write_group`` closure on the driver. These tests pin the
-"same": identical read-back values, marker stats, parquet physical
-schema, single-file-per-partition layout, the size gate (env ceiling 0
-forces the distributed writer), and the failure fallback.
+Every write (insert, merge, GDPR rewrite, DML rewrite) either collects to
+one Arrow table and runs the group writer on the driver, or runs the same
+writer in a ``groupBy(...).applyInArrow`` job; the ``format("icedb")``
+writer runs it on executors. These tests pin that the paths are
+interchangeable — identical read-back values, marker stats (zone maps and
+Blooms) and Parquet physical schema — that every write API goes through
+the one helper, and that the local path falls back only on the failure it
+exists for: a collect that outgrows ``spark.driver.maxResultSize``.
 """
 
 from __future__ import annotations
 
-import datetime
+import json
+import logging
+import os
+import subprocess
+import sys
+import textwrap
+import threading
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from icedb_spark import IceTable, PartitionField, PartitionSpec
-
-TS_SPEC = PartitionSpec(
-    fields=[PartitionField("m", "date_format(ts, 'yyyy-MM')")]
+from icedb_spark import IceTable
+from icedb_spark import table as table_mod
+from write_helpers import (
+    collect_sorted,
+    count_local_writes,
+    force_distributed,
+    make,
+    result_size_error,
+    ts_rows,
 )
-
-
-def ts_rows(n=60):
-    return [
-        {
-            "event_id": i,
-            "ts": datetime.datetime(2023, 1 + (i % 3), 1 + (i % 27)),
-            "event_type": "ab"[i % 2],
-            "value": float(i) + 0.25,
-        }
-        for i in range(n)
-    ]
-
-
-def make(spark, tmp_path, name, **kw):
-    return IceTable(
-        spark,
-        str(tmp_path / name),
-        partition_spec=kw.pop("partition_spec", TS_SPEC),
-        sort_order=kw.pop("sort_order", ["event_type", "ts"]),
-        **kw,
-    )
-
-
-def _collect_sorted(t):
-    df = t.read()
-    return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
 
 
 def _drain_merge(t):
@@ -63,9 +45,7 @@ def _drain_merge(t):
         merged.append(res)
 
 
-def _two_insert_table(spark, tmp_path, name, monkeypatch=None, env=None):
-    if monkeypatch is not None and env is not None:
-        monkeypatch.setenv("SPARK_GRAFT_LOCAL_WRITE_BYTES", env)
+def _two_insert_table(spark, tmp_path, name):
     t = make(spark, tmp_path, name, bloom_columns=["event_type"])
     rows = ts_rows()
     t.insert(rows=rows[:30])
@@ -73,113 +53,263 @@ def _two_insert_table(spark, tmp_path, name, monkeypatch=None, env=None):
     return t
 
 
-def test_local_merge_equals_distributed_merge(spark, tmp_path, monkeypatch):
-    """The merged file must be identical (marker stats, physical parquet
-    schema — timestamp conversion drift between toArrow and applyInArrow
-    would show here — read-back values, one file per partition) whether
-    the rewrite ran driver-local (default: input bytes under the ceiling)
-    or distributed (ceiling forced to 0)."""
-    fast = _two_insert_table(spark, tmp_path, "fast")
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_WRITE_BYTES", "0")
-    slow = _two_insert_table(spark, tmp_path, "slow")
-    monkeypatch.delenv("SPARK_GRAFT_LOCAL_WRITE_BYTES")
-    _drain_merge(fast)
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_WRITE_BYTES", "0")
-    _drain_merge(slow)
-    monkeypatch.delenv("SPARK_GRAFT_LOCAL_WRITE_BYTES")
-
-    mf = {m.partition(): m for m in fast.snapshot().alive_files()}
-    ms = {m.partition(): m for m in slow.snapshot().alive_files()}
-    assert set(mf) == set(ms) and len(mf) == 3  # one merged file per month
-    for p in mf:
-        assert mf[p].stats == ms[p].stats, p
-        sf = pq.read_schema(fast.storage.absolute(mf[p].path))
-        ss = pq.read_schema(slow.storage.absolute(ms[p].path))
-        assert sf == ss, p
-    assert _collect_sorted(fast) == _collect_sorted(slow)
+def _first_partition(t):
+    return sorted(m.partition() for m in t.snapshot().alive_files())[0]
 
 
-def test_local_merge_falls_back_on_collect_failure(spark, tmp_path, monkeypatch):
-    """Any local-path failure must fall back to the distributed writer
-    and still produce the merged file."""
+def _format_append(spark, t, df):
+    from icedb_spark.datasource import IceDataSource
+
+    try:
+        spark.dataSource.register(IceDataSource)
+    except Exception:
+        pass  # already registered in this session
+    (
+        df.withColumn("_partition", t.partition_spec.partition_column(df))
+        .coalesce(1)  # one writer task: one file per partition, like insert
+        .write.format("icedb").mode("append").option("path", t.path).save()
+    )
+
+
+# Each case: (set-up, write under test). The write runs once on the local
+# path and once on the other one; ``format_append`` compares the
+# DataSource writer against a driver-local insert of the same batch.
+def _setup_empty(spark, tmp_path, name):
+    return make(spark, tmp_path, name, bloom_columns=["event_type"])
+
+
+def _scan_batch(spark, tmp_path):
+    src = make(spark, tmp_path, "src")
+    src.insert(rows=ts_rows())
+    return src.read()  # a Parquet scan: estimable, tiny
+
+
+CASES = {
+    "insert_rows": (
+        _setup_empty, lambda spark, tmp, t, local: t.insert(rows=ts_rows())
+    ),
+    "insert_scan": (
+        _setup_empty,
+        lambda spark, tmp, t, local: t.insert(df=_scan_batch(spark, tmp)),
+    ),
+    "merge": (_two_insert_table, lambda spark, tmp, t, local: _drain_merge(t)),
+    "rewrite_partition": (
+        _two_insert_table,
+        lambda spark, tmp, t, local: t.rewrite_partition(
+            _first_partition(t), "select * from _rows where event_id % 5 != 0"
+        ),
+    ),
+    "delete": (
+        _two_insert_table,
+        lambda spark, tmp, t, local: t.delete("event_type = 'a' and value > 10"),
+    ),
+    "update": (
+        _two_insert_table,
+        lambda spark, tmp, t, local: t.update(
+            {"value": "value * 2", "ts": "ts + interval 40 days"},
+            where="event_id % 4 = 0",
+        ),
+    ),
+    "format_append": (
+        _setup_empty,
+        lambda spark, tmp, t, local: (
+            t.insert(df=_scan_batch(spark, tmp))
+            if local
+            else _format_append(spark, t, _scan_batch(spark, tmp))
+        ),
+    ),
+}
+
+
+def _fingerprint(t):
+    """Alive files as (partition, stats, physical schema), sorted."""
+    return sorted(
+        (
+            m.partition(),
+            json.dumps(m.stats, sort_keys=True),
+            str(pq.read_schema(t.storage.absolute(m.path))),
+        )
+        for m in t.snapshot().alive_files()
+    )
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_local_equals_distributed(spark, tmp_path, monkeypatch, case):
+    setup, write = CASES[case]
+    tables = {}
+    for local in (True, False):
+        t = setup(spark, tmp_path / case, "local" if local else "other")
+        with monkeypatch.context() as mp:
+            calls = count_local_writes(mp)
+            if not local:
+                force_distributed(mp)
+            write(spark, tmp_path / case / ("l" if local else "o"), t, local)
+        if local:
+            assert calls, f"{case}: the local run must write driver-side"
+        else:
+            assert not calls, f"{case}: the other run must not write driver-side"
+        tables[local] = t
+    fast, slow = tables[True], tables[False]
+    assert _fingerprint(fast) == _fingerprint(slow)
+    assert collect_sorted(fast) == collect_sorted(slow)
+
+
+def test_local_merge_falls_back_on_collect_failure(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """A local collect that outgrows spark.driver.maxResultSize falls back
+    to the distributed writer, logs one WARNING carrying the exception,
+    and still produces the merged file."""
     t = _two_insert_table(spark, tmp_path, "fb")
-    from pyspark.sql import DataFrame
+    err = result_size_error(spark)
 
     def boom(self):
-        raise RuntimeError("collect failed")
+        raise err
 
-    monkeypatch.setattr(DataFrame, "toArrow", boom)
-    merged = _drain_merge(t)
+    monkeypatch.setattr(type(spark.range(1)), "toArrow", boom)
+    with caplog.at_level(logging.WARNING, logger="icedb_spark.table"):
+        merged = _drain_merge(t)
     assert merged, "merge must still happen via the distributed writer"
     by_part = {}
     for m in t.snapshot().alive_files():
         by_part[m.partition()] = by_part.get(m.partition(), 0) + 1
     assert all(n == 1 for n in by_part.values())
+    warned = [r for r in caplog.records if "maxResultSize" in r.getMessage()]
+    assert len(warned) == len(merged)
+    assert all(r.exc_info and r.exc_info[1] is err for r in warned)
 
 
-def test_estimate_gated_insert_matches_distributed(spark, tmp_path, monkeypatch):
-    """A scan-backed df (lazy plan, no tag, not isLocal) whose optimizer
-    estimate is under the ceiling must take the driver-local insert and
-    produce identical files to the distributed writer."""
-    src = make(spark, tmp_path, "src")
-    src.insert(rows=ts_rows())
-    batch = src.read()  # a parquet scan — estimable, tiny
+@pytest.mark.parametrize("op", ["insert", "merge"])
+def test_other_local_write_failure_propagates(spark, tmp_path, monkeypatch, op):
+    """Any failure but the result-size one is a real error: it propagates
+    and nothing is committed (the distributed writer would hit the same
+    Arrow conversion error, so a fallback could only hide it)."""
+    t = _two_insert_table(spark, tmp_path, op)
+    before = t.snapshot()
 
-    called = {"n": 0}
-    orig = IceTable._write_batch_local
+    def boom(self):
+        raise RuntimeError("simulated Arrow conversion failure")
 
-    def spy(self, df, writer):
-        called["n"] += 1
-        return orig(self, df, writer)
-
-    monkeypatch.setattr(IceTable, "_write_batch_local", spy)
-    fast = make(spark, tmp_path, "fast2", bloom_columns=["event_type"])
-    mk_fast = fast.insert(df=batch)
-    assert called["n"] == 1, "estimate gate must route through the local writer"
-
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_WRITE_BYTES", "0")
-    slow = make(spark, tmp_path, "slow2", bloom_columns=["event_type"])
-    mk_slow = slow.insert(df=batch)
-    assert called["n"] == 1, "ceiling 0 must keep the distributed writer"
-
-    key = lambda m: m.path.rsplit("/", 1)[0]
-    bf = {key(m): m for m in mk_fast}
-    bs = {key(m): m for m in mk_slow}
-    assert set(bf) == set(bs)
-    for p in bf:
-        assert bf[p].stats == bs[p].stats, p
-    assert pq.read_schema(fast.storage.absolute(mk_fast[0].path)) == \
-        pq.read_schema(slow.storage.absolute(mk_slow[0].path))
-    assert _collect_sorted(fast) == _collect_sorted(slow)
+    monkeypatch.setattr(type(spark.range(1)), "toArrow", boom)
+    with pytest.raises(RuntimeError, match="simulated"):
+        if op == "insert":
+            t.insert(rows=ts_rows(6))
+        else:
+            t.merge(max_file_size=1 << 40, max_file_count=100)
+    after = t.snapshot()
+    assert after.log_files == before.log_files
+    assert {m.path for m in after.alive_files()} == {
+        m.path for m in before.alive_files()
+    }
 
 
-def test_dml_rewrite_local_matches_distributed(spark, tmp_path, monkeypatch):
-    """A small DELETE's rewrite (estimate-gated) must produce the same
-    surviving rows, stats and physical schema on both paths."""
-    fast = _two_insert_table(spark, tmp_path, "dfast")
-    slow = _two_insert_table(spark, tmp_path, "dslow")
-    fast.delete("event_type = 'a' and value > 10")
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_WRITE_BYTES", "0")
-    slow.delete("event_type = 'a' and value > 10")
-    monkeypatch.delenv("SPARK_GRAFT_LOCAL_WRITE_BYTES")
-    assert _collect_sorted(fast) == _collect_sorted(slow)
-    mf = sorted(str(m.stats) for m in fast.snapshot().alive_files())
-    ms = sorted(str(m.stats) for m in slow.snapshot().alive_files())
-    assert mf == ms
+def test_every_write_api_routes_through_write_groups(spark, tmp_path, monkeypatch):
+    """Every write API reaches ``_write_groups``, and no group writer is
+    built on the driver outside it — a copy-pasted write path fails here."""
+    state = threading.local()
+    calls = []
+    orig_write = IceTable._write_groups
+    orig_make = table_mod._make_group_writer
+
+    def write_groups(self, *a, **kw):
+        calls.append(1)
+        state.depth = getattr(state, "depth", 0) + 1
+        try:
+            return orig_write(self, *a, **kw)
+        finally:
+            state.depth -= 1
+
+    def make_group_writer(*a, **kw):
+        assert getattr(state, "depth", 0), "group writer built outside _write_groups"
+        return orig_make(*a, **kw)
+
+    monkeypatch.setattr(IceTable, "_write_groups", write_groups)
+    monkeypatch.setattr(table_mod, "_make_group_writer", make_group_writer)
+
+    t = make(spark, tmp_path, "all")
+    rows = ts_rows()
+    src = spark.createDataFrame(
+        [(1, 100.5), (1000, 7.0)], "event_id long, value double"
+    ).withColumn("ts", F.lit("2023-02-03").cast("timestamp")).withColumn(
+        "event_type", F.lit("b")
+    )
+    ops = [
+        ("insert", lambda: t.insert(rows=rows[:30])),
+        ("insert", lambda: t.insert(rows=rows[30:])),
+        ("merge", lambda: t.merge(max_file_size=1 << 40, max_file_count=100)),
+        ("insert", lambda: t.insert(rows=rows)),
+        ("merge_all", lambda: t.merge_all(max_file_size=1 << 40, max_file_count=100)),
+        ("rewrite_partition", lambda: t.rewrite_partition(
+            _first_partition(t), "select * from _rows where event_id != 3")),
+        ("delete", lambda: t.delete("event_id = 6")),
+        ("delete", lambda: t.delete("event_id = 9", distributed=True)),
+        ("update", lambda: t.update({"value": "value + 1"}, where="event_id = 12")),
+        ("merge_into", lambda: t.merge_into(src, on="event_id")),
+        ("apply_deletes", lambda: (t.delete_where("event_id = 15"), t.apply_deletes())),
+    ]
+    for name, op in ops:
+        n = len(calls)
+        op()
+        assert len(calls) > n, f"{name} did not write through _write_groups"
 
 
-def test_rewrite_partition_local_matches_distributed(spark, tmp_path, monkeypatch):
-    """The GDPR per-file rewrite (gated on the source file's known bytes)
-    must be path-equivalent too."""
-    fast = _two_insert_table(spark, tmp_path, "rfast")
-    slow = _two_insert_table(spark, tmp_path, "rslow")
-    part = sorted({m.partition() for m in fast.snapshot().alive_files()})[0]
-    q = "select * from _rows where event_id % 5 != 0"
-    fast.rewrite_partition(part, q)
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_WRITE_BYTES", "0")
-    slow.rewrite_partition(part, q)
-    monkeypatch.delenv("SPARK_GRAFT_LOCAL_WRITE_BYTES")
-    assert _collect_sorted(fast) == _collect_sorted(slow)
-    mf = {m.path: m.stats for m in fast.snapshot().alive_files()}
-    ms = {m.path: m.stats for m in slow.snapshot().alive_files()}
-    assert sorted(mf.values(), key=str) == sorted(ms.values(), key=str)
+def test_compressible_merge_falls_back_under_tiny_max_result_size(spark, tmp_path):
+    """End to end, with the real failure: a merge whose input is a few KB
+    of Parquet on disk (under the 32 MB ceiling) but decodes past a 1 MB
+    spark.driver.maxResultSize must complete on the distributed writer,
+    with markers identical to a run under the default limit."""
+    script = textwrap.dedent(
+        """
+        import json, sys
+        import pyarrow as pa
+        from pyspark.sql import SparkSession, functions as F
+        from icedb_spark import IceTable, PartitionField, PartitionSpec
+
+        root, limit = sys.argv[1], sys.argv[2]
+        spark = (
+            SparkSession.builder.master("local[2]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.sql.shuffle.partitions", "2")
+            .config("spark.driver.maxResultSize", limit)
+            .getOrCreate()
+        )
+        spark.sparkContext.setLogLevel("OFF")
+        t = IceTable(
+            spark, root,
+            partition_spec=PartitionSpec(fields=[PartitionField("p", "'all'")]),
+            sort_order=["id"],
+        )
+        n = 12_000
+        for i in range(2):  # under the tiny limit these fall back too
+            t.insert(df=spark.range(i * n, (i + 1) * n).withColumn(
+                "s", F.lit("z" * 200)))
+        src = sum(m.file_bytes for m in t.snapshot().alive_files())
+        assert t.merge(max_file_size=1 << 40, max_file_count=100)
+        (m,) = t.snapshot().alive_files()
+        agg = t.read().agg(F.count("*"), F.sum("id"), F.sum(F.length("s")))
+        print(json.dumps({"src_bytes": src, "stats": m.stats,
+                          "file_bytes": m.file_bytes,
+                          "agg": list(agg.first())}))
+        spark.stop()
+        """
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        [os.path.dirname(os.path.dirname(os.path.abspath(table_mod.__file__)))]
+        + [p for p in [env.get("PYTHONPATH")] if p]
+    )
+    out = {}
+    for limit in ("1m", "1g"):
+        proc = subprocess.run(
+            [sys.executable, "-c", script, str(tmp_path / limit), limit],
+            capture_output=True, text=True, env=env, timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        out[limit] = (json.loads(proc.stdout.strip().splitlines()[-1]), proc.stderr)
+    tiny, plain = out["1m"][0], out["1g"][0]
+    assert tiny["src_bytes"] < 1 << 20 < 2 * 12_000 * 200  # compressible
+    assert "exceeded spark.driver.maxResultSize" in out["1m"][1]
+    assert "exceeded spark.driver.maxResultSize" not in out["1g"][1]
+    assert tiny["stats"] == plain["stats"]
+    assert tiny["file_bytes"] == plain["file_bytes"]
+    assert tiny["agg"] == plain["agg"] == [24_000, sum(range(24_000)), 24_000 * 200]

@@ -252,9 +252,10 @@ def test_trained_ivf_plans_broadcast_codebook(spark, sf_dir):
     # the trained codebook is COLLECTED to a literal local relation, so
     # the O(iters*N*C) Lloyd lineage executes exactly once — the search
     # plan must contain no training aggregates (per-dimension avg) and
-    # must read the codebook from a local scan on both its uses
+    # must read the codebook from a local scan on both its uses (the
+    # centroids are built from an Arrow table: a LocalTableScan)
     assert "avg(" not in plan
-    assert plan.count("Scan ExistingRDD") >= 2
+    assert plan.count("LocalTableScan [cid") >= 2
 
 
 def test_persisted_ivf_search_plans_broadcast_cell_join(spark, sf_dir, tmp_path):

@@ -1,84 +1,32 @@
-"""The driver-local small-batch insert fast path (optimization r12).
+"""The insert side of the write-path gate (optimization r12/r13).
 
 A tiny batch (a codebook, a handful of row dicts) pays ~0.5 s of fixed
 distributed-writer cost (shuffle stage + Python-worker round trip) for a
-write that takes single-digit milliseconds on the driver. The fast path
-runs the SAME ``write_group`` closure driver-side — these tests pin that
-"same": identical read-back values, identical marker stats (zone maps over
-a timestamp sort column included), identical file layout, and that the
-auto-trigger / opt-outs / failure fallback behave as documented.
+write that takes single-digit milliseconds on the driver. These tests pin
+which inserts take the driver-local path — row batches up to
+``_SMALL_BATCH_ROWS``, relations whose size estimate is under the ceiling,
+the codebook builders' outputs — which do not, and that the rest of the
+insert contract (WAP staging, write splits, the one designed fallback)
+holds on it. Path equivalence lives in ``test_local_write_paths``.
 """
 
 from __future__ import annotations
 
-import datetime
-import json
-
-import pyarrow.parquet as pq
-import pytest
-from pyspark.sql import functions as F
+import pyarrow as pa
 
 from icedb_spark import IceTable, PartitionField, PartitionSpec
-
-TS_SPEC = PartitionSpec(
-    fields=[PartitionField("m", "date_format(ts, 'yyyy-MM')")]
+from icedb_spark import table as table_mod
+from write_helpers import (
+    count_local_writes,
+    make,
+    result_size_error,
+    ts_rows,
 )
 
 
-def ts_rows(n=12):
-    return [
-        {
-            "event_id": i,
-            "ts": datetime.datetime(2023, 1 + (i % 3), 1 + i),
-            "event_type": "ab"[i % 2],
-            "value": float(i) + 0.25,
-        }
-        for i in range(n)
-    ]
-
-
-def make(spark, tmp_path, name, **kw):
-    return IceTable(
-        spark,
-        str(tmp_path / name),
-        partition_spec=kw.pop("partition_spec", TS_SPEC),
-        sort_order=kw.pop("sort_order", ["event_type", "ts"]),
-        **kw,
-    )
-
-
-def _collect_sorted(t):
-    df = t.read()
-    return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
-
-
-def test_local_write_equals_distributed_write(spark, tmp_path):
-    """Marker stats, partition layout, parquet schema and read-back values
-    must be identical between the two write paths — timestamp sort column
-    (zone-map serialization is the risky part) and bloom filter included."""
-    rows = ts_rows()
-    fast = make(spark, tmp_path, "fast", bloom_columns=["event_type"])
-    slow = make(spark, tmp_path, "slow", bloom_columns=["event_type"])
-    mk_fast = fast.insert(rows=rows)  # auto: len(rows) <= threshold
-    mk_slow = slow.insert(rows=rows, small=False)  # forced distributed
-
-    key = lambda m: m.path.rsplit("/", 1)[0]  # partition dir
-    by_part_fast = {key(m): m for m in mk_fast}
-    by_part_slow = {key(m): m for m in mk_slow}
-    assert set(by_part_fast) == set(by_part_slow)  # same partitions touched
-    for p in by_part_fast:
-        # identical zone maps + blooms (stats dict covers both)
-        assert by_part_fast[p].stats == by_part_slow[p].stats, p
-    # identical physical parquet schema (type mapping drift between
-    # toArrow and applyInArrow would show up here)
-    sf = pq.read_schema(fast.storage.absolute(mk_fast[0].path))
-    ss = pq.read_schema(slow.storage.absolute(mk_slow[0].path))
-    assert sf == ss
-    assert _collect_sorted(fast) == _collect_sorted(slow)
-
-
-def test_array_double_batch_roundtrip(spark, tmp_path):
-    """The codebook shape: array<double> rows through the fast path."""
+def test_array_double_batch_roundtrip(spark, tmp_path, monkeypatch):
+    """The codebook shape: array<double> rows through the local path."""
+    calls = count_local_writes(monkeypatch)
     t = make(
         spark,
         tmp_path,
@@ -86,72 +34,75 @@ def test_array_double_batch_roundtrip(spark, tmp_path):
         partition_spec=PartitionSpec(fields=[PartitionField("p", "'all'")]),
         sort_order=["cid"],
     )
-    df = spark.createDataFrame(
-        [(i, [0.5 * i, -1.25 * i]) for i in range(16)],
-        "cid bigint, cv array<double>",
-    )
-    t.insert(df=df, small=True)
+    df = spark.createDataFrame(pa.table({
+        "cid": pa.array(range(16), pa.int64()),
+        "cv": pa.array([[0.5 * i, -1.25 * i] for i in range(16)],
+                       pa.list_(pa.float64())),
+    }))
+    t.insert(df=df)
+    assert calls == [16]
     got = {r["cid"]: r["cv"] for r in t.read().collect()}
     assert got[3] == [1.5, -3.75]
     assert len(got) == 16
 
 
 def test_auto_trigger_and_opt_outs(spark, tmp_path, monkeypatch):
-    calls = []
-    orig = IceTable._write_batch_local
-
-    def spy(self, df, writer):
-        calls.append(1)
-        return orig(self, df, writer)
-
-    monkeypatch.setattr(IceTable, "_write_batch_local", spy)
+    calls = count_local_writes(monkeypatch)
 
     t = make(spark, tmp_path, "auto")
-    t.insert(rows=ts_rows())  # small rows batch -> fast path
+    t.insert(rows=ts_rows(12))  # small rows batch -> local
     assert len(calls) == 1
-    t.insert(rows=ts_rows(), small=False)  # explicit opt-out
-    assert len(calls) == 1
-    # a plain (non-local, untagged) DataFrame does NOT auto-trigger
-    t.insert(df=spark.createDataFrame(ts_rows()))
-    assert len(calls) == 1
-    # tagged operator output DOES
-    tagged = spark.createDataFrame(ts_rows())
-    tagged._icedb_small_batch = True
-    t.insert(df=tagged)
+    # a relation with an estimate under the ceiling -> local
+    t.insert(df=spark.createDataFrame(pa.Table.from_pylist(ts_rows(12))))
     assert len(calls) == 2
+    # a parallelized row list has no estimate -> distributed
+    t.insert(df=spark.createDataFrame(ts_rows(12)))
+    assert len(calls) == 2
+    # above the row cutoff -> distributed
+    monkeypatch.setattr(table_mod, "_SMALL_BATCH_ROWS", 11)
+    t.insert(rows=ts_rows(12))
+    assert len(calls) == 2
+    monkeypatch.undo()
+    calls = count_local_writes(monkeypatch)
 
-    # custom insert SQL may expand the batch arbitrarily -> auto disabled,
-    # explicit True honored
+    # an explicit fan-out keeps the distributed writer
+    ts = make(spark, tmp_path, "split", write_splits=2)
+    ts.insert(rows=ts_rows(12))
+    assert not calls
+
+    # custom insert SQL may expand the batch arbitrarily: the row count
+    # no longer bounds it, so a row batch sizes by the (absent) estimate
     tc = make(
         spark,
         tmp_path,
         "custom",
         custom_insert_query="select *, value * 2 as v2 from _rows",
     )
-    tc.insert(rows=ts_rows())
-    assert len(calls) == 2
-    tc.insert(rows=ts_rows(), small=True)
-    assert len(calls) == 3
+    tc.insert(rows=ts_rows(12))
+    assert not calls
     assert {r["v2"] for r in tc.read().select("v2").collect()} == {
         2 * (float(i) + 0.25) for i in range(12)
     }
 
 
 def test_fallback_on_local_write_failure(spark, tmp_path, monkeypatch):
-    """If the driver-side write raises, the insert silently completes on
-    the distributed path — the fast path is a performance choice, never a
-    new failure mode."""
+    """If the driver-side collect outgrows spark.driver.maxResultSize, the
+    insert completes on the distributed path — the local path is a
+    performance choice, never a new failure mode."""
+    err = result_size_error(spark)
 
-    def boom(self, df, writer):
-        raise RuntimeError("simulated driver-side failure")
+    def boom(self):
+        raise err
 
-    monkeypatch.setattr(IceTable, "_write_batch_local", boom)
+    monkeypatch.setattr(type(spark.range(1)), "toArrow", boom)
     t = make(spark, tmp_path, "fb")
-    mk = t.insert(rows=ts_rows())
+    mk = t.insert(rows=ts_rows(12))
     assert mk and t.read().count() == 12
 
 
-def test_codebook_operators_tagged_small(spark, sf_dir):
+def test_codebook_builders_write_local(spark, sf_dir, tmp_path, monkeypatch):
+    """The three codebook builders' outputs carry honest optimizer
+    estimates, so inserting them takes the local path with no tag."""
     from icedb_spark.operators import ivf_codebook_rows
     from icedb_spark.operators.similarity import (
         _train_codebook,
@@ -160,12 +111,26 @@ def test_codebook_operators_tagged_small(spark, sf_dir):
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assert ivf_codebook_rows(emb, n_centroids=4)._icedb_small_batch
-    assert pq_subcodebook_rows(emb, dim=64, m_sub=4, k_sub=4)._icedb_small_batch
     trained = _train_codebook(
         _training_view(emb, "vec_id", "embedding"), dim=64, n_centroids=4, iters=1
     )
-    assert trained._icedb_small_batch
+    builders = {
+        "ivf_codebook_rows": (ivf_codebook_rows(emb, n_centroids=4), ["cid"]),
+        "pq_subcodebook_rows": (
+            pq_subcodebook_rows(emb, dim=64, m_sub=4, k_sub=4), ["s", "j"]
+        ),
+        "_train_codebook": (trained, ["cid"]),
+    }
+    for name, (df, sort_order) in builders.items():
+        calls = count_local_writes(monkeypatch)
+        t = make(
+            spark, tmp_path, name,
+            partition_spec=PartitionSpec(fields=[PartitionField("p", "'all'")]),
+            sort_order=sort_order,
+        )
+        t.insert(df=df)
+        assert calls, f"{name} output must take the local write"
+        monkeypatch.undo()
 
 
 def test_auto_write_splits(spark, tmp_path, sf_dir, monkeypatch):
@@ -181,11 +146,8 @@ def test_auto_write_splits(spark, tmp_path, sf_dir, monkeypatch):
         )]
     )
     src = load_table(spark, sf_dir, "events")
-    # force the fan-out at test scale: tiny per-task target, and disable
-    # the r13 estimate-gated driver-local path (which otherwise takes
-    # precedence for batches this small — see test_local_write_paths)
-    monkeypatch.setenv("SPARK_GRAFT_WRITE_SPLIT_BYTES", "4096")
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_WRITE_BYTES", "0")
+    # force the fan-out at test scale: tiny per-task target
+    monkeypatch.setattr(table_mod, "_WRITE_SPLIT_BYTES", 4096)
     t = IceTable(spark, str(tmp_path / "auto"), partition_spec=spec,
                  sort_order=["event_type", "ts"], write_splits="auto")
     assert t._resolve_write_splits(src) > 1
@@ -197,16 +159,16 @@ def test_auto_write_splits(spark, tmp_path, sf_dir, monkeypatch):
     assert t.read().count() == src.count()
 
     # below the target: single file per partition (reference layout)
-    monkeypatch.setenv("SPARK_GRAFT_WRITE_SPLIT_BYTES", str(1 << 30))
+    monkeypatch.setattr(table_mod, "_WRITE_SPLIT_BYTES", 1 << 30)
     t2 = IceTable(spark, str(tmp_path / "auto1"), partition_spec=spec,
                   sort_order=["event_type", "ts"], write_splits="auto")
     assert t2._resolve_write_splits(src) == 1
     # un-estimable plan (parallelized local relation reports the
     # defaultSizeInBytes sentinel): auto declines to fan out
-    monkeypatch.setenv("SPARK_GRAFT_WRITE_SPLIT_BYTES", "4096")
+    monkeypatch.setattr(table_mod, "_WRITE_SPLIT_BYTES", 4096)
     local = spark.createDataFrame([{"a": 1}] * 50)
     assert t2._resolve_write_splits(local) == 1
-    # auto + tiny rows batch still takes the small-batch local write
+    # auto + tiny rows batch still takes the local write
     mk = t2.insert(rows=[
         {"event_id": i, "ts": 1686_000_000_000_000_000 + i,
          "event_type": "a", "value": float(i)}
@@ -216,9 +178,9 @@ def test_auto_write_splits(spark, tmp_path, sf_dir, monkeypatch):
 
 
 def test_wap_staged_small_batch(spark, tmp_path):
-    """publish=False returns a StagedInsert from the fast path too."""
+    """publish=False returns a StagedInsert from the local path too."""
     t = make(spark, tmp_path, "wap")
-    staged = t.insert(rows=ts_rows(), publish=False)
+    staged = t.insert(rows=ts_rows(12), publish=False)
     assert t.read().count() == 0  # invisible until publish
     t.publish(staged)
     assert t.read().count() == 12
