@@ -409,7 +409,10 @@ class MemoryStorage:
         self._mtimes[key] = now_ms()
 
     def get(self, key: str) -> bytes:
-        return self._objs[key]
+        try:
+            return self._objs[key]
+        except KeyError:
+            raise FileNotFoundError(key) from None  # contract parity
 
     def list(
         self, prefix: str, include_hidden: bool = False
@@ -432,7 +435,7 @@ class MemoryStorage:
         self._mtimes.pop(key, None)
 
     def size(self, key: str) -> int:
-        return len(self._objs[key])
+        return len(self.get(key))
 
     def exists(self, key: str) -> bool:
         return key in self._objs

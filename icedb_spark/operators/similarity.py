@@ -628,16 +628,23 @@ def _train_codebook(
                     names=["cell", "n", "s"],
                 )
 
+        # the per-(batch, cell) partials close in a two-stage JVM integer
+        # merge on (cell, dim index), as simhash's do: the driver receives
+        # C*dim rows whatever the input size, not one row per batch and
+        # cell (every partial carries all dim sums, so sum(n) per
+        # (cell, i) is the cell's count for each i)
         parts = assigned.select("cell", "ti").mapInArrow(
             _partial_sums, "cell bigint, n bigint, s array<bigint>"
         )
+        sums = (
+            parts.select("cell", "n", F.posexplode("s").alias("i", "s"))
+            .groupBy("cell", "i")
+            .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
+        )
         acc: dict = {}
-        for r in parts.collect():
-            n0, s0 = acc.setdefault(int(r["cell"]), [0, [0] * dim])
-            a0 = acc[int(r["cell"])]
-            a0[0] = n0 + int(r["n"])
-            for i in range(dim):
-                s0[i] += int(r["s"][i])
+        for r in sums.collect():
+            a0 = acc.setdefault(int(r["cell"]), [int(r["n"]), [0] * dim])
+            a0[1][int(r["i"])] = int(r["s"])
         def _coord(S: int, n: int) -> float:
             # signum(S) * ((20*|S| + n) div (2*n)) / 10000.0, all exact
             if S == 0:

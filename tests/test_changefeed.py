@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from icedb_spark import IceTable, PartitionField, PartitionSpec, get_log_file_info
+from write_helpers import force_two_job_dml
 
 
 def make_table(spark, tmp_path, **kw) -> IceTable:
@@ -43,11 +44,21 @@ def feed_tuples(df):
     )
 
 
-def test_feed_streams_inserts_and_captured_deletes(spark, tmp_path):
+@pytest.fixture(params=["per_file", "two_job"])
+def dml_strategy(request, monkeypatch):
+    """Run a DML test on each copy-on-write strategy: the default
+    threshold (per-file jobs here), then a threshold of 0 (two jobs)."""
+    if request.param == "two_job":
+        force_two_job_dml(monkeypatch)
+
+
+def test_feed_streams_inserts_and_captured_deletes(spark, tmp_path, dml_strategy):
     t = make_table(spark, tmp_path)
     t.insert(rows([1, 2, 3]))
     t0 = head_ms(t)
-    t.delete("id = 2", capture_changes=True)
+    s = t.delete("id = 2", capture_changes=True)
+    assert s == {"files_scanned": 1, "files_rewritten": 1,
+                 "files_dropped": 0, "rows_deleted": 1}
     # full window: the insert batch plus the delete image
     assert feed_tuples(t.changes_feed(0)) == [
         ("delete", 2, 1.0),
@@ -57,11 +68,12 @@ def test_feed_streams_inserts_and_captured_deletes(spark, tmp_path):
     assert feed_tuples(t.changes_feed(t0)) == [("delete", 2, 1.0)]
 
 
-def test_feed_update_pre_and_post_images(spark, tmp_path):
+def test_feed_update_pre_and_post_images(spark, tmp_path, dml_strategy):
     t = make_table(spark, tmp_path)
     t.insert(rows([1, 2]))
     t0 = head_ms(t)
-    t.update({"v": "v * 10"}, "id = 2", capture_changes=True)
+    s = t.update({"v": "v * 10"}, "id = 2", capture_changes=True)
+    assert s == {"files_scanned": 1, "files_rewritten": 1, "rows_updated": 1}
     assert feed_tuples(t.changes_feed(t0)) == [
         ("update_postimage", 2, 10.0),
         ("update_preimage", 2, 1.0),

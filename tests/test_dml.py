@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from icedb_spark import IceTable, PartitionField, PartitionSpec
+from write_helpers import force_two_job_dml
 
 BUCKET_SPEC = PartitionSpec(fields=[PartitionField("b", "bucket")])
 
@@ -105,7 +106,7 @@ def test_delete_prunes_by_zone_map(spark, tmp_path):
     assert ids_of(t.read()) == [1, 2, 100]
 
 
-def test_delete_distributed_matches_per_file_path(spark, tmp_path):
+def test_delete_distributed_matches_per_file_path(spark, tmp_path, monkeypatch):
     """The two-job distributed path (forced) must agree with the per-file
     path on results, summary, and the untouched/dropped/rewritten split."""
     t = make_table(spark, tmp_path)
@@ -113,7 +114,8 @@ def test_delete_distributed_matches_per_file_path(spark, tmp_path):
     t.insert(rows([3, 4], bucket="b"))        # untouched (pred false)
     t.insert(rows([10, 11], bucket="c"))      # fully dropped
     before = {m.path for m in t.snapshot().alive_files()}
-    s = t.delete("id = 2 or id >= 10", distributed=True)
+    force_two_job_dml(monkeypatch)
+    s = t.delete("id = 2 or id >= 10")
     assert s == {"files_scanned": 3, "files_rewritten": 1,
                  "files_dropped": 1, "rows_deleted": 3}
     after = {m.path for m in t.snapshot().alive_files()}
@@ -138,17 +140,18 @@ def test_delete_auto_threshold_picks_distributed(spark, tmp_path):
     assert ids_of(t.read()) == [i * 10 for i in range(n)]
 
 
-def test_delete_distributed_noop_and_time_travel(spark, tmp_path):
+def test_delete_distributed_noop_and_time_travel(spark, tmp_path, monkeypatch):
     from icedb_spark import get_log_file_info
 
     t = make_table(spark, tmp_path)
     t.insert(rows([1, 2]))
     logs_before = len(t.snapshot().log_files)
-    s = t.delete("id > 99", distributed=True)
+    force_two_job_dml(monkeypatch)
+    s = t.delete("id > 99")
     assert s["rows_deleted"] == 0
     assert len(t.snapshot().log_files) == logs_before
     at = get_log_file_info(t.snapshot().log_files[-1])[0]
-    t.delete("id = 1", distributed=True)
+    t.delete("id = 1")
     assert ids_of(t.read(at_ms=at)) == [1, 2]
     assert ids_of(t.read()) == [2]
 
@@ -198,12 +201,13 @@ def test_update_null_where_rows_untouched(spark, tmp_path):
     assert ids_of(t.read()) == [3, 101, 102]
 
 
-def test_update_distributed_matches_per_file_path(spark, tmp_path):
+def test_update_distributed_matches_per_file_path(spark, tmp_path, monkeypatch):
     t = make_table(spark, tmp_path)
     t.insert(rows([1, 2], bucket="a"))
     t.insert(rows([3, 4], bucket="b"))
     before = {m.path for m in t.snapshot().alive_files()}
-    s = t.update({"v": "v + 5"}, "id in (2, 3)", distributed=True)
+    force_two_job_dml(monkeypatch)
+    s = t.update({"v": "v + 5"}, "id in (2, 3)")
     assert s["files_scanned"] == 2 and s["files_rewritten"] == 2
     assert s["rows_updated"] == 2
     got = {r["id"]: r["v"] for r in t.read().collect()}
@@ -214,11 +218,12 @@ def test_update_distributed_matches_per_file_path(spark, tmp_path):
     assert not (before & {m.path for m in t.snapshot().alive_files()})
 
 
-def test_update_distributed_partition_move(spark, tmp_path):
+def test_update_distributed_partition_move(spark, tmp_path, monkeypatch):
     t = make_table(spark, tmp_path)
     t.insert(rows([1, 2], bucket="a"))
     t.insert(rows([3, 4], bucket="b"))
-    t.update({"bucket": "'z'"}, "id in (2, 4)", distributed=True)
+    force_two_job_dml(monkeypatch)
+    t.update({"bucket": "'z'"}, "id in (2, 4)")
     got = {r["id"]: r["bucket"] for r in t.read().collect()}
     assert got == {1: "a", 2: "z", 3: "b", 4: "z"}
     assert {m.partition() for m in t.snapshot().alive_files()} == \
@@ -469,7 +474,7 @@ def test_predicate_schema_projection(spark, tmp_path):
     assert len(t._predicate_schema(schema, "true").fields) == 1
 
 
-def test_distributed_dml_exact_with_projected_count_pass(spark, tmp_path):
+def test_distributed_dml_exact_with_projected_count_pass(spark, tmp_path, monkeypatch):
     """Distributed DELETE/UPDATE (forced) stay exact with the projected
     matched-count pass, including a predicate on a non-sort column."""
     from icedb_spark import IceTable, PartitionField, PartitionSpec
@@ -486,11 +491,12 @@ def test_distributed_dml_exact_with_projected_count_pass(spark, tmp_path):
             for i in range(40)
         ]
     )
-    s = t.delete("v >= 5.0", distributed=True)
+    force_two_job_dml(monkeypatch)
+    s = t.delete("v >= 5.0")
     assert s["rows_deleted"] == sum(1 for i in range(40) if i % 7 >= 5)
     left = sorted(r["id"] for r in t.read().collect())
     assert left == [i for i in range(40) if i % 7 < 5]
-    s = t.update({"v": "v + 100"}, "id < 10", distributed=True)
+    s = t.update({"v": "v + 100"}, "id < 10")
     assert s["rows_updated"] == sum(1 for i in left if i < 10)
     got = {r["id"]: r["v"] for r in t.read().collect()}
     for i in left:

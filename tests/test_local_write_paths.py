@@ -30,6 +30,7 @@ from write_helpers import (
     collect_sorted,
     count_local_writes,
     force_distributed,
+    force_two_job_dml,
     make,
     result_size_error,
     ts_rows,
@@ -51,6 +52,12 @@ def _two_insert_table(spark, tmp_path, name):
     t.insert(rows=rows[:30])
     t.insert(rows=rows[30:])
     return t
+
+
+def _two_job_delete(t, where):
+    with pytest.MonkeyPatch.context() as mp:
+        force_two_job_dml(mp)
+        return t.delete(where)
 
 
 def _first_partition(t):
@@ -242,7 +249,7 @@ def test_every_write_api_routes_through_write_groups(spark, tmp_path, monkeypatc
         ("rewrite_partition", lambda: t.rewrite_partition(
             _first_partition(t), "select * from _rows where event_id != 3")),
         ("delete", lambda: t.delete("event_id = 6")),
-        ("delete", lambda: t.delete("event_id = 9", distributed=True)),
+        ("delete", lambda: _two_job_delete(t, "event_id = 9")),
         ("update", lambda: t.update({"value": "value + 1"}, where="event_id = 12")),
         ("merge_into", lambda: t.merge_into(src, on="event_id")),
         ("apply_deletes", lambda: (t.delete_where("event_id = 15"), t.apply_deletes())),

@@ -1151,6 +1151,72 @@ def test_ivf_index_table_accepts_trained_codebook(spark, tmp_path):
     assert got_cells == want_cells
 
 
+def test_trainer_collect_is_bounded_under_tiny_max_result_size():
+    """The Lloyd trainer's driver collect is C*dim rows whatever the input:
+    6,000 Arrow batches of 2 rows per iteration train under a 1 MB
+    spark.driver.maxResultSize (a collect of one row per (batch, cell),
+    each carrying all dim sums, passes that limit after two tasks). The
+    codebook is bit-identical to the one that per-batch collect produced
+    under the default limit, pinned by the digest of its exact float
+    reprs."""
+    import hashlib
+    import json
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    from icedb_spark.operators import similarity
+
+    script = textwrap.dedent(
+        """
+        import json
+        from pyspark.sql import SparkSession, functions as F
+        from icedb_spark.operators.similarity import (
+            _train_codebook, _training_view,
+        )
+
+        spark = (
+            SparkSession.builder.master("local[2]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.sql.shuffle.partitions", "2")
+            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+            .config("spark.driver.maxResultSize", "1m")
+            .getOrCreate()
+        )
+        spark.sparkContext.setLogLevel("OFF")
+        dim = 32
+        df = spark.range(12_000).select(
+            F.col("id").alias("vec_id"),
+            F.array(*[F.sin(F.col("id") * (i + 1) + i) for i in range(dim)])
+            .alias("embedding"),
+        )
+        code = _train_codebook(
+            _training_view(df, "vec_id", "embedding"),
+            dim=dim, n_centroids=8, iters=2,
+        )
+        rows = sorted((r["cid"], list(r["cv"])) for r in code.collect())
+        print(json.dumps(repr(rows)))
+        spark.stop()
+        """
+    )
+    env = dict(os.environ)
+    pkg = os.path.dirname(os.path.abspath(similarity.__file__))
+    env["PYTHONPATH"] = os.pathsep.join(
+        [os.path.dirname(os.path.dirname(pkg))]
+        + [p for p in [env.get("PYTHONPATH")] if p]
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, env=env, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    code = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert hashlib.sha256(code.encode()).hexdigest() == (
+        "23dc1a7cd0683b39d65c7d39d9415ae9010ab0ddc3ec256f4b1dad00ea8bd376"
+    )
+
+
 def test_ivf_index_table_invariant_under_compaction(spark, tmp_path):
     """The ice02 merge-invariance claim applied to the ANN index:
     search results are identical before and after a compaction pass

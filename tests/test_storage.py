@@ -107,6 +107,39 @@ def test_log_roundtrip_on_memory_storage():
     }
 
 
+def test_memory_fold_retries_a_log_vacuumed_between_list_and_get(tmp_path):
+    """A lock-free memory:// reader that lists a log a vacuum then deletes
+    gets FileNotFoundError from the GET, as on every other storage, so the
+    fold's one fresh list-and-fold retry succeeds."""
+    st = MemoryStorage(f"fold-race-{tmp_path.name}")
+    io = IceLogIO()
+    s = Schema({"a": "VARCHAR"})
+    f1 = FileMarker("_data/f1.parquet", 1000, 1)
+    f2 = FileMarker("_data/f2.parquet", 2000, 1)
+    io.append(st, 1, s, [f1], timestamp_ms=1000)
+    io.append(st, 1, s, [f2], timestamp_ms=2000)
+    with pytest.raises(FileNotFoundError):
+        st.get("_log/absent.jsonl")
+    lists = []
+    real_list = st.list
+
+    def list_then_vacuum(prefix, include_hidden=False):
+        out = real_list(prefix, include_hidden)
+        if not lists:
+            # the vacuum commits its collapsed log, then deletes a log
+            # this reader has already listed
+            io.append(st, 1, s, [f1, f2], merged=True, timestamp_ms=3000)
+            st.delete(out[0][0])
+        lists.append(prefix)
+        return out
+
+    st.list = list_then_vacuum
+    IceLogIO.clear_parse_cache()
+    state = io.read_at_max_time(st)
+    assert len(lists) == 2
+    assert {m.path for m in state.alive_files()} == {f1.path, f2.path}
+
+
 SPEC = PartitionSpec(
     fields=[PartitionField("d", "date_format(timestamp_millis(ts), 'yyyy-MM-dd')")]
 )

@@ -47,6 +47,12 @@ def force_distributed(monkeypatch):
     monkeypatch.setattr(table_mod, "_LOCAL_FANOUT_BYTES", -1)
 
 
+def force_two_job_dml(monkeypatch):
+    """A strategy threshold below any candidate count: delete and update
+    take the two-job strategy until the monkeypatch is undone."""
+    monkeypatch.setattr(table_mod, "_DML_DISTRIBUTED_THRESHOLD", 0)
+
+
 def count_local_writes(monkeypatch) -> list:
     """Record every driver-local group write (one entry per collected
     batch) in the returned list."""
