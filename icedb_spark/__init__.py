@@ -12,7 +12,6 @@ the execution engine is entirely Spark-first.
 
 from .log import (
     FileMarker,
-    FsspecStorage,
     IceLogIO,
     LogMetadata,
     LogState,
@@ -24,7 +23,6 @@ from .log import (
     get_log_file_info,
     now_ms,
     partition_from_path,
-    retry_transient,
     storage_for,
 )
 from .mv import DoubleWriter, IncrementalView
@@ -63,13 +61,11 @@ __all__ = [
     "LogTombstone",
     "PartitionField",
     "PartitionSpec",
-    "FsspecStorage",
     "MemoryStorage",
     "Schema",
     "SchemaConflictException",
     "Storage",
     "get_log_file_info",
-    "retry_transient",
     "storage_for",
     "now_ms",
     "parse_partition",

@@ -84,7 +84,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from .log import IceLogIO, Schema, get_log_file_info, storage_for
+from .log import IceLogIO, Schema, arrow_fs, get_log_file_info, storage_for
 from .types import duckdb_schema_to_spark, spark_schema_to_duckdb
 
 
@@ -467,8 +467,10 @@ def _read_conformed(
     schema: StructType,
     filters: Optional[dict] = None,
     shard: Optional[tuple] = None,
+    storage_options: Optional[dict] = None,
 ):
-    """Executor-side: open one parquet file (URI roots via pyarrow.fs) and
+    """Executor-side: open one parquet file (URI roots via pyarrow.fs,
+    configured by ``storage_options`` as in :func:`arrow_fs`) and
     yield Arrow record batches conformed to the unified schema — missing
     columns null-seeded, extras dropped, order fixed (the same contract as
     the engine's schema-specified scans).
@@ -489,14 +491,10 @@ def _read_conformed(
 
     target = to_arrow_schema(schema)
     if "://" in abs_path:
-        import pyarrow.fs as pafs
-
         # Storage.absolute() maps s3 roots to s3a:// for Spark's Hadoop
         # parquet reader, but THIS path reads via pyarrow on the Python
-        # worker — same objects, pyarrow's native client, s3:// scheme
-        if abs_path.startswith("s3a://"):
-            abs_path = "s3://" + abs_path[len("s3a://"):]
-        fs, inner = pafs.FileSystem.from_uri(abs_path)
+        # worker — same objects, pyarrow's native client
+        fs, inner = arrow_fs(abs_path, storage_options)
         table = _read_projected(inner, fs, list(target.names), filters, shard)
     else:
         table = _read_projected(
@@ -717,13 +715,16 @@ class _IceBatchWriter(DataSourceArrowWriter):
         self._log_path = options.get("log_path") or self._path
         doc = {}
         try:
+            raw = storage_for(self._log_path).get("_meta/spec.json")
+        except FileNotFoundError:
+            pass  # spec-less table: plain append, no layout knobs
+        else:
+            # any other failure (torn JSON, unreadable object) must fail
+            # the write: treating the table as spec-less would drop a
+            # preserved `_partition` column and every layout knob
             import json as _json
 
-            doc = _json.loads(
-                storage_for(self._log_path).get("_meta/spec.json").decode()
-            )
-        except Exception:
-            pass  # spec-less table: plain append, no layout knobs
+            doc = _json.loads(raw.decode())
         self._sort_order = doc.get("sort_order") or []
         self._compression = doc.get("compression", "snappy")
         self._row_group_size = doc.get("row_group_size", 122_880)

@@ -253,9 +253,10 @@ class Storage:
     """Minimal key/value object-store abstraction over a table root.
 
     Keys are '/'-separated relative paths (``_log/...``, ``_data/...``).
-    The local implementation is used in tests and on a single node; a cluster
-    deployment would add an S3/fsspec implementation with the same five
-    methods — the log layer above is storage-agnostic by construction.
+    This POSIX implementation serves plain and ``file://`` roots;
+    :class:`MemoryStorage` and the object-store :class:`PyArrowFsStorage`
+    keep the same methods — the log layer above is storage-agnostic by
+    construction (:func:`storage_for` picks one from the root's scheme).
     """
 
     def __init__(self, root: str):
@@ -326,66 +327,6 @@ class Storage:
         return self._abs(key)
 
 
-def _default_transient(e: Exception) -> bool:
-    """Transient per the reference's data-PUT policy: HTTP >= 500 or 429
-    (``icedb/icedb.py:161-163``), plus connection-level blips.
-
-    Real backends disagree on where the status lives: ``status_code``
-    (requests), ``code``, ``status`` (aiohttp), or botocore's
-    ``e.response['ResponseMetadata']['HTTPStatusCode']`` — check them all,
-    or the advertised S3 retry never fires for its primary backend.
-
-    S3 throttling/timeout errors (``SlowDown``, ``Throttling``,
-    ``RequestTimeout``...) ship with HTTP 400, so the ``Error.Code`` string
-    must be consulted BEFORE the numeric status — a status-first check
-    would classify them non-transient and never retry exactly the errors
-    retry exists for."""
-    code = getattr(e, "status_code", None)
-    if code is None:
-        code = getattr(e, "code", None)
-    if code is None:
-        code = getattr(e, "status", None)
-    resp = getattr(e, "response", None)  # botocore ClientError shape
-    if isinstance(resp, dict):
-        err_code = (resp.get("Error") or {}).get("Code")
-        if err_code in ("SlowDown", "Throttling", "ThrottlingException",
-                        "RequestTimeout", "RequestTimeoutException",
-                        "InternalError", "ServiceUnavailable"):
-            return True
-        if code is None:
-            code = (resp.get("ResponseMetadata") or {}).get("HTTPStatusCode")
-            if code is None and isinstance(err_code, str) and err_code.isdigit():
-                code = err_code
-    if code is not None:
-        try:
-            code = int(code)
-        except (TypeError, ValueError):
-            return False
-        return code >= 500 or code == 429
-    return isinstance(e, (ConnectionError, TimeoutError))
-
-
-def retry_transient(
-    fn,
-    attempts: int = 3,
-    backoff_s: float = 0.3,
-    is_transient=None,
-    sleep=time.sleep,
-):
-    """Linear-backoff retry for transient object-store failures — the
-    reference retries data-file PUTs 3x with ``0.3s * attempt`` sleeps on
-    HTTP >= 500/429 (``icedb/icedb.py:146-170``)."""
-    if is_transient is None:
-        is_transient = _default_transient
-    for attempt in range(1, attempts + 1):
-        try:
-            return fn()
-        except Exception as e:
-            if attempt == attempts or not is_transient(e):
-                raise
-            sleep(backoff_s * attempt)
-
-
 class MemoryStorage:
     """In-process dict-backed store — the ``memory://`` analog.
 
@@ -447,180 +388,56 @@ class MemoryStorage:
         return f"memory://{self.root}/{key}"
 
 
-class FsspecStorage:
-    """fsspec-backed object store (``s3://``, ``gs://``, ``abfs://``, ...)
-    with transient-failure retry — the S3-native deployment path
-    (reference keeps separate boto3 log/data clients,
-    ``icedb/log.py:32-56`` / ``icedb/icedb.py:75-78``; here each store is
-    one FsspecStorage with its own ``storage_options`` credentials).
+def arrow_fs(uri: str, storage_options: Optional[dict] = None):
+    """Build the ``pyarrow.fs`` client for a URI: ``(fs, path)``, where
+    ``path`` is the location inside ``fs`` as ``FileSystem.from_uri``
+    gives it. Every remote read and write (driver storage, executor
+    writers and readers) gets its client here.
 
-    ``put``/``get``/``delete`` retry 3x with linear backoff on transient
-    errors, matching the reference's PUT policy. ``absolute()`` maps
-    ``s3://`` to ``s3a://`` so Spark executors read the same objects
-    through the Hadoop S3 connector.
-    """
+    ``s3a://`` (Spark's Hadoop spelling of the same objects) reads as
+    ``s3://``. ``storage_options`` are ``pyarrow.fs.S3FileSystem`` keyword
+    arguments (``access_key``, ``secret_key``, ``endpoint_override``,
+    ``scheme``, ``region``, ...); without them credentials and endpoint
+    resolve as the AWS SDK does (env vars incl. ``AWS_ENDPOINT_URL``,
+    profiles, IMDS). Retry is the SDK's own: 3 attempts on throttling
+    and 5xx replies, the reference's data-PUT policy
+    (``icedb/icedb.py:146-170``)."""
+    import pyarrow.fs as pafs
 
-    def __init__(
-        self,
-        root_uri: str,
-        storage_options: Optional[dict] = None,
-        attempts: int = 3,
-        backoff_s: float = 0.3,
-    ):
-        try:
-            import fsspec
-        except ImportError as e:  # pragma: no cover - env without fsspec
-            raise ImportError(
-                "FsspecStorage requires the 'fsspec' package (plus the "
-                "protocol driver, e.g. s3fs for s3://)"
-            ) from e
-        self.root = root_uri.rstrip("/")
-        self.protocol = root_uri.split("://", 1)[0]
-        self.fs = fsspec.filesystem(self.protocol, **(storage_options or {}))
-        self.attempts = attempts
-        self.backoff_s = backoff_s
-        # path inside the filesystem (strip the scheme for fs calls)
-        self._base = self.root.split("://", 1)[1]
-
-    def _abs(self, key: str) -> str:
-        return f"{self._base}/{key}"
-
-    def _retry(self, fn):
-        return retry_transient(fn, attempts=self.attempts, backoff_s=self.backoff_s)
-
-    def put(self, key: str, data: bytes) -> None:
-        # single-object PUT: atomic publish on object stores
-        self._retry(lambda: self.fs.pipe_file(self._abs(key), data))
-
-    def get(self, key: str) -> bytes:
-        return self._retry(lambda: self.fs.cat_file(self._abs(key)))
-
-    def list(
-        self, prefix: str, include_hidden: bool = False
-    ) -> list[tuple[str, int]]:
-        base = self._abs(prefix)
-        if not self._retry(lambda: self.fs.exists(base)):
-            return []
-        found = self._retry(lambda: self.fs.find(base, detail=True))
-        out = []
-        for path, info in found.items():
-            if info.get("type") == "directory":
-                continue
-            name = path.rsplit("/", 1)[-1]
-            if not include_hidden and (name.startswith(".") or ".tmp-" in name):
-                continue
-            rel = path[len(self._base) :].lstrip("/")
-            out.append((rel, int(info.get("size", 0))))
-        out.sort()
-        return out
-
-    def delete(self, key: str) -> None:
-        try:
-            self._retry(lambda: self.fs.rm_file(self._abs(key)))
-        except FileNotFoundError:
-            pass
-
-    def size(self, key: str) -> int:
-        return int(self._retry(lambda: self.fs.info(self._abs(key)))["size"])
-
-    def exists(self, key: str) -> bool:
-        return bool(self._retry(lambda: self.fs.exists(self._abs(key))))
-
-    def mtime_ms(self, key: str) -> Optional[int]:
-        import datetime
-
-        try:
-            info = self._retry(lambda: self.fs.info(self._abs(key)))
-        except (OSError, FileNotFoundError):
-            return None
-        # fsspec backends disagree on the field name AND type: epoch floats
-        # (local), datetimes (s3), ISO-8601 strings (some HTTP/memory
-        # impls). `is not None` checks, not `or`: epoch 0 is a real mtime.
-        for field in ("mtime", "LastModified", "last_modified"):
-            mt = info.get(field)
-            if mt is None:
-                continue
-            if isinstance(mt, datetime.datetime):
-                return int(mt.timestamp() * 1000)
-            if isinstance(mt, (int, float)):
-                return int(mt * 1000)
-            if isinstance(mt, str):
-                try:
-                    return int(
-                        datetime.datetime.fromisoformat(
-                            mt.replace("Z", "+00:00")
-                        ).timestamp()
-                        * 1000
-                    )
-                except ValueError:
-                    continue
-        return None
-
-    def absolute(self, key: str) -> str:
-        if self.protocol == "s3":
-            return f"s3a://{self._base}/{key}"
-        return f"{self.root}/{key}"
+    if uri.startswith("s3a://"):
+        uri = "s3://" + uri[len("s3a://"):]
+    if not storage_options:
+        return pafs.FileSystem.from_uri(uri)
+    if not uri.startswith("s3://"):
+        raise ValueError("storage_options are only supported for s3:// roots")
+    return pafs.S3FileSystem(**storage_options), uri[len("s3://"):].rstrip("/")
 
 
 class PyArrowFsStorage:
-    """Object-store storage backed by ``pyarrow.fs`` — the fallback for
-    environments without fsspec (pyarrow bundles the real AWS C++ SDK S3
-    client, so ``s3://`` works out of the box). Same five-method contract
-    and transient-retry policy as :class:`FsspecStorage`.
-
-    Credentials/endpoint resolve exactly as the AWS SDK does (env vars
-    incl. ``AWS_ENDPOINT_URL``, profiles, IMDS); ``storage_options``
-    pass straight to ``pyarrow.fs.S3FileSystem`` (``access_key``,
-    ``secret_key``, ``endpoint_override``, ``scheme``, ``region``, ...)
-    for explicit configuration. End-to-end tested against a real S3 REST
-    server in tests/test_s3_lifecycle.py.
+    """Object-store storage over ``pyarrow.fs`` (``s3://``, ``gs://``,
+    ``abfs://``): the one remote backend. pyarrow bundles the real AWS C++
+    SDK S3 client, so ``s3://`` works out of the box; the client comes
+    from :func:`arrow_fs`, which also owns ``storage_options`` and retry.
+    End-to-end tested against a real S3 REST server in
+    tests/test_s3_lifecycle.py.
     """
 
-    def __init__(
-        self,
-        root_uri: str,
-        storage_options: Optional[dict] = None,
-        attempts: int = 3,
-        backoff_s: float = 0.3,
-    ):
-        import pyarrow.fs as pafs
-
+    def __init__(self, root_uri: str, storage_options: Optional[dict] = None):
         self.root = root_uri.rstrip("/")
         self.protocol = root_uri.split("://", 1)[0]
-        self._base = self.root.split("://", 1)[1]
-        if storage_options:
-            if self.protocol != "s3":
-                raise ValueError(
-                    "storage_options are only supported for s3:// roots"
-                )
-            self.fs = pafs.S3FileSystem(**storage_options)
-        else:
-            self.fs, _ = pafs.FileSystem.from_uri(self.root)
-        self.attempts = attempts
-        self.backoff_s = backoff_s
+        self.fs, self._base = arrow_fs(self.root, storage_options)
 
     def _abs(self, key: str) -> str:
         return f"{self._base}/{key}"
 
-    def _retry(self, fn):
-        return retry_transient(
-            fn, attempts=self.attempts, backoff_s=self.backoff_s
-        )
-
     def put(self, key: str, data: bytes) -> None:
         # visible atomically at multipart-complete / PUT on object stores
-        def _put():
-            with self.fs.open_output_stream(self._abs(key)) as f:
-                f.write(data)
-
-        self._retry(_put)
+        with self.fs.open_output_stream(self._abs(key)) as f:
+            f.write(data)
 
     def get(self, key: str) -> bytes:
-        def _get():
-            with self.fs.open_input_stream(self._abs(key)) as f:
-                return f.read()
-
-        return self._retry(_get)
+        with self.fs.open_input_stream(self._abs(key)) as f:
+            return f.read()
 
     def list(
         self, prefix: str, include_hidden: bool = False
@@ -630,9 +447,8 @@ class PyArrowFsStorage:
         sel = pafs.FileSelector(
             self._abs(prefix), recursive=True, allow_not_found=True
         )
-        infos = self._retry(lambda: self.fs.get_file_info(sel))
         out = []
-        for fi in infos:
+        for fi in self.fs.get_file_info(sel):
             if fi.type != pafs.FileType.File:
                 continue
             name = fi.path.rsplit("/", 1)[-1]
@@ -647,7 +463,7 @@ class PyArrowFsStorage:
 
     def delete(self, key: str) -> None:
         try:
-            self._retry(lambda: self.fs.delete_file(self._abs(key)))
+            self.fs.delete_file(self._abs(key))
         except FileNotFoundError:
             pass
         except OSError as e:
@@ -664,22 +480,22 @@ class PyArrowFsStorage:
     def size(self, key: str) -> int:
         import pyarrow.fs as pafs
 
-        fi = self._retry(lambda: self.fs.get_file_info(self._abs(key)))
+        fi = self.fs.get_file_info(self._abs(key))
         if fi.type == pafs.FileType.NotFound or fi.size is None:
-            raise FileNotFoundError(key)  # contract parity with fsspec
+            raise FileNotFoundError(key)  # contract parity with Storage
         return int(fi.size)
 
     def exists(self, key: str) -> bool:
         import pyarrow.fs as pafs
 
-        fi = self._retry(lambda: self.fs.get_file_info(self._abs(key)))
+        fi = self.fs.get_file_info(self._abs(key))
         return fi.type != pafs.FileType.NotFound
 
     def mtime_ms(self, key: str) -> Optional[int]:
         import pyarrow.fs as pafs
 
         try:
-            fi = self._retry(lambda: self.fs.get_file_info(self._abs(key)))
+            fi = self.fs.get_file_info(self._abs(key))
         except OSError:
             return None
         if fi.type == pafs.FileType.NotFound or fi.mtime is None:
@@ -692,24 +508,22 @@ class PyArrowFsStorage:
         return f"{self.root}/{key}"
 
 
-def storage_for(root: str, **kwargs):
+def storage_for(root: str, storage_options: Optional[dict] = None):
     """Factory: pick the Storage implementation from the root's scheme.
 
     Plain paths and ``file://`` stay POSIX; ``memory://`` maps to the
-    in-process store; anything else (``s3://`` etc.) goes through fsspec,
-    falling back to pyarrow.fs (bundled AWS SDK) when fsspec is absent.
+    in-process store; every other scheme (``s3://``, ``gs://``, ...) is
+    a :class:`PyArrowFsStorage`. ``storage_options`` apply to ``s3://``
+    roots only (see :func:`arrow_fs`).
     """
-    if "://" not in root:
-        return Storage(root)
-    proto, rest = root.split("://", 1)
-    if proto == "file":
-        return Storage("/" + rest.lstrip("/"))
+    proto, rest = root.split("://", 1) if "://" in root else ("", root)
+    if proto not in ("", "file", "memory"):
+        return PyArrowFsStorage(root, storage_options)
+    if storage_options:
+        raise ValueError("storage_options are only supported for s3:// roots")
     if proto == "memory":
         return MemoryStorage(rest)
-    try:
-        return FsspecStorage(root, **kwargs)
-    except ImportError:
-        return PyArrowFsStorage(root, **kwargs)
+    return Storage("/" + rest.lstrip("/") if proto == "file" else root)
 
 
 def path_safe_hostname() -> str:
@@ -770,18 +584,13 @@ class LogState:
 
 def _storage_cache_token(storage) -> "Optional[tuple]":
     """Identity token for the parse cache: the table-root string every
-    Storage implementation carries (``root`` locally/in-memory, ``_base``
-    for fsspec/pyarrow), falling back to object identity. The falsy
-    empty-string root (``Storage('/')`` after rstrip) is a VALID token —
-    test ``is None``, or same-root instances stop sharing the cache and
-    the id() fallback can alias a recycled address."""
-    for attr in ("root", "_base"):
-        v = getattr(storage, attr, None)
-        if v is not None:
-            return (type(storage).__name__, v)
-    # unknown storage type with no stable root: no safe identity (id()
-    # recycles after GC) — signal the caller to bypass the cache
-    return None
+    Storage implementation carries. The falsy empty-string root
+    (``Storage('/')`` after rstrip) is a VALID token — test ``is None``,
+    or same-root instances stop sharing the cache. A storage object with
+    no ``root`` has no stable identity (``id()`` recycles after GC), so
+    it gets None and the caller bypasses the cache."""
+    root = getattr(storage, "root", None)
+    return None if root is None else (type(storage).__name__, root)
 
 
 class IceLogIO:

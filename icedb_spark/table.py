@@ -60,6 +60,7 @@ from .log import (
     LogTombstone,
     Schema,
     Storage,
+    arrow_fs,
     get_log_file_info,
     now_ms,
     storage_for,
@@ -478,20 +479,16 @@ def _make_group_writer(
         name = f"{uuid.uuid4()}.parquet"
         if "://" in root:
             # URI roots (file://, s3://, ...): write through pyarrow.fs on
-            # the executor. Direct write to the final name is safe on every
-            # backend — visibility comes from the LOG commit, never from
-            # object existence, so a partial file is unreferenced garbage.
-            # ``fs_options`` (from IceTable(storage_options=...)) configure
-            # the executor-side client EXPLICITLY — required when workers
-            # were launched before credentials/endpoint env vars existed,
-            # and the clean channel for per-table credentials generally.
-            import pyarrow.fs as pafs
-
-            if fs_options and root.startswith("s3://"):
-                fs = pafs.S3FileSystem(**fs_options)
-                base = root.split("://", 1)[1]
-            else:
-                fs, base = pafs.FileSystem.from_uri(root)
+            # the executor, the same client the driver's storage uses
+            # (``arrow_fs``). Direct write to the final name is safe on
+            # every backend — visibility comes from the LOG commit, never
+            # from object existence, so a partial file is unreferenced
+            # garbage. ``fs_options`` (IceTable(storage_options=...))
+            # configure the executor-side client EXPLICITLY — required
+            # when workers were launched before credentials/endpoint env
+            # vars existed, and the clean channel for per-table
+            # credentials generally.
+            fs, base = arrow_fs(root, fs_options)
             full = f"{base.rstrip('/')}/{rel_dir}/{name}"
             fs.create_dir(f"{base.rstrip('/')}/{rel_dir}", recursive=True)
             with fs.open_output_stream(full) as sink:
@@ -676,8 +673,6 @@ class IceTable:
             raise ValueError("constraint_mode must be 'fail' or 'drop'")
         self.constraints = dict(constraints or {})
         self.constraint_mode = constraint_mode
-        # scheme-dispatched: plain/``file://`` -> POSIX, ``s3://`` etc. ->
-        # fsspec with put-retry; reads go through storage.absolute() URIs
         # Exclusive-lock hook for multi-node maintenance: the reference
         # REQUIRES callers to hold an external exclusive lock around
         # merge/vacuum (/root/reference/ARCHITECTURE.md:115-117,
@@ -694,8 +689,8 @@ class IceTable:
         self.lock_provider = lock_provider
         self._lock_local = threading.local()
         # explicit object-store client config (credentials, endpoint,
-        # region ...) for BOTH the driver-side storage AND the
-        # executor-side Arrow writers; None = ambient resolution (env
+        # region ...) for the driver-side storage AND the executor-side
+        # Arrow writers and readers; None = ambient resolution (env
         # vars / profiles / IMDS), the usual production default
         self.storage_options = storage_options
         # cross-table transaction visibility (icedb_spark.txn): an object
@@ -704,11 +699,9 @@ class IceTable:
         # (never persisted in the spec): the catalog attaches it to every
         # table it registers when transactions are enabled.
         self.commit_visibility = commit_visibility
-        self.storage = (
-            storage_for(self.path, storage_options=storage_options)
-            if storage_options
-            else storage_for(self.path)
-        )
+        # scheme-dispatched: plain/``file://`` -> POSIX, ``s3://`` etc. ->
+        # pyarrow.fs; reads go through storage.absolute() URIs
+        self.storage = storage_for(self.path, storage_options)
         # log may live on a separate (lower-latency) store than data —
         # reference keeps separate log/data S3 clients with own credentials
         # (icedb/icedb.py:75-78); pass any Storage-like object here
@@ -1501,6 +1494,7 @@ class IceTable:
             return df
         from .datasource import _file_shards, _read_conformed
 
+        fs_opts = self.storage_options
         sc = self.spark.sparkContext
         split_bytes = _parse_bytes_conf(
             self.spark.conf.get(
@@ -1535,7 +1529,9 @@ class IceTable:
                 ):
                     norm = _strip_scheme(p)
                     shard = None if sn < 0 else (si, sn)
-                    for rb in _read_conformed(p, schema, shard=shard):
+                    for rb in _read_conformed(
+                        p, schema, shard=shard, storage_options=fs_opts
+                    ):
                         if file_col:
                             rb = _pa.RecordBatch.from_arrays(
                                 rb.columns
@@ -3113,20 +3109,12 @@ class IceTable:
             import uuid as u
 
             import pyarrow as pa
-            import pyarrow.fs as pafs
             import pyarrow.parquet as pq
 
             bl = [b for b in batches if b.num_rows]
             if not bl:
                 return
-            uri = target
-            if uri.startswith("s3a://"):
-                uri = "s3://" + uri[len("s3a://"):]
-            if fs_opts and uri.startswith("s3://"):
-                fs = pafs.S3FileSystem(**fs_opts)
-                base = uri.split("://", 1)[1]
-            else:
-                fs, base = pafs.FileSystem.from_uri(uri)
+            fs, base = arrow_fs(target, fs_opts)
             fs.create_dir(base, recursive=True)
             full = f"{base.rstrip('/')}/part-{u.uuid4().hex}.parquet"
             with fs.open_output_stream(full) as sink:

@@ -556,8 +556,10 @@ class CatalogTransaction:
                     _m, _s, fms, tmbs = t.log_io.read_log(
                         t.log_storage, key
                     )
-                except Exception:
-                    continue
+                except FileNotFoundError:
+                    continue  # listed, then gone: nothing to publish
+                # any other read error propagates: skipping the log would
+                # publish an incomplete map peers then trust as final
                 # a DML commit records the files it rewrote as DEAD
                 # FileMarkers (alive=False); tmbs holds log-file
                 # tombstones — take both
@@ -612,11 +614,16 @@ class CatalogTransaction:
         self._cleanup_markers()
 
     def _log_hit(self, t, key: str, mine: set[str]) -> set[str]:
-        """Paths a single log commit references that intersect ``mine``."""
+        """Paths a single log commit references that intersect ``mine``.
+
+        A peer log that vanished between the listing and this GET counts
+        as a full hit (the conservative answer: abort, the caller may
+        retry); any other read error propagates — reading it as
+        "disjoint" would let two overlapping transactions both commit."""
         try:
             _m, _s, fms, tmbs = t.log_io.read_log(t.log_storage, key)
-        except Exception:
-            return set()
+        except FileNotFoundError:
+            return set(mine)
         refs = {m.path for m in fms} | {tb.path for tb in tmbs}
         return refs & mine
 

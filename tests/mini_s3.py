@@ -27,6 +27,13 @@ object-CRUD subset the engine exercises:
 Signatures are accepted without verification (the point is the wire
 protocol and object semantics, not IAM). Storage is an in-memory dict;
 ``LastModified`` has real second resolution like S3's.
+
+Fault injection: ``fail_next(method, n)`` answers the next ``n`` requests
+of one kind (``GET``, ``LIST``, ``HEAD``, ``PUT``, ``POST``, ``DELETE``)
+with an S3 error reply instead of serving them, so tests can watch the
+client's own retry absorb or surface a throttling/5xx blip.
+``requests`` counts every request by kind and ``faults_served`` the
+injected replies.
 """
 
 from __future__ import annotations
@@ -36,6 +43,7 @@ import http.server
 import threading
 import time
 import uuid
+from collections import Counter
 from datetime import datetime, timezone
 from urllib.parse import parse_qs, unquote, urlsplit
 
@@ -59,6 +67,9 @@ class MiniS3Server:
         # — lets tests assert that column projection actually shrinks
         # the byte ranges a scan fetches
         self.bytes_served: dict[str, int] = {}
+        self.requests: Counter = Counter()
+        self.faults_served = 0
+        self._faults: dict[str, list] = {}  # kind -> [left, status, code]
         self._lock = threading.Lock()
         outer = self
 
@@ -105,9 +116,28 @@ class MiniS3Server:
                 ).encode()
                 self._send(code, body, [("Content-Type", "application/xml")])
 
+            def _faulted(self, kind: str) -> bool:
+                """Count the request; answer it with an armed fault
+                instead of serving it. Callers read any request body
+                first, so the kept-alive connection stays in sync."""
+                with outer._lock:
+                    outer.requests[kind] += 1
+                    f = outer._faults.get(kind)
+                    if f is None:
+                        return False
+                    f[0] -= 1
+                    if f[0] == 0:
+                        del outer._faults[kind]
+                    outer.faults_served += 1
+                self._xml_error(f[1], f[2])
+                return True
+
             # ---- PUT: bucket create / object / part
             def do_PUT(self):
                 bucket, key, q = self._split()
+                data = self._body()
+                if self._faulted("PUT"):
+                    return
                 with outer._lock:
                     if not key:
                         outer.buckets.setdefault(bucket, {})
@@ -116,7 +146,6 @@ class MiniS3Server:
                     if bucket not in outer.buckets:
                         self._xml_error(404, "NoSuchBucket")
                         return
-                    data = self._body()
                     if "partNumber" in q and "uploadId" in q:
                         up = outer.uploads.get(q["uploadId"][0])
                         if up is None:
@@ -146,7 +175,9 @@ class MiniS3Server:
             # ---- POST: multipart initiate / complete
             def do_POST(self):
                 bucket, key, q = self._split()
-                body = self._body()
+                self._body()
+                if self._faulted("POST"):
+                    return
                 with outer._lock:
                     if "uploads" in q:
                         uid = uuid.uuid4().hex
@@ -181,6 +212,8 @@ class MiniS3Server:
             # ---- GET: object (ranged) / ListObjectsV2
             def do_GET(self):
                 bucket, key, q = self._split()
+                if self._faulted("GET" if key else "LIST"):
+                    return
                 with outer._lock:
                     objs = outer.buckets.get(bucket)
                     if objs is None:
@@ -279,6 +312,8 @@ class MiniS3Server:
 
             def do_DELETE(self):
                 bucket, key, q = self._split()
+                if self._faulted("DELETE"):
+                    return
                 with outer._lock:
                     if "uploadId" in q:
                         outer.uploads.pop(q["uploadId"][0], None)
@@ -294,6 +329,8 @@ class MiniS3Server:
         class HeadFixHandler(Handler):
             def do_HEAD(self):
                 bucket, key, q = self._split()
+                if self._faulted("HEAD"):
+                    return
                 with outer._lock:
                     objs = outer.buckets.get(bucket)
                     o = objs.get(key) if (objs is not None and key) else None
@@ -333,6 +370,16 @@ class MiniS3Server:
         return False
 
     # test conveniences
+    def fail_next(
+        self, method: str, n: int = 1, status: int = 503,
+        code: str = "SlowDown",
+    ) -> None:
+        """Answer the next ``n`` requests of kind ``method`` (``GET``,
+        ``LIST``, ``HEAD``, ``PUT``, ``POST`` or ``DELETE``) with an
+        S3 error reply of ``status``/``code``."""
+        with self._lock:
+            self._faults[method] = [n, status, code]
+
     def keys(self, bucket: str) -> list[str]:
         with self._lock:
             return sorted(self.buckets.get(bucket, {}))

@@ -401,6 +401,51 @@ def test_writer_keeps_partition_column_when_spec_preserves(spark, tmp_path):
     # placement still honored the value
     assert {m.partition() for m in t.snapshot().alive_files()} == {"k=a"}
 
+@pytest.mark.parametrize("damage", ["truncated", "directory"])
+def test_writer_fails_on_unreadable_spec(spark, tmp_path, damage):
+    """The writer may treat a table as spec-less only when
+    ``_meta/spec.json`` is absent. A torn or unreadable spec (here a
+    truncated document, or a directory in its place: an OSError even as
+    root) must fail the save and commit nothing — read as spec-less, a
+    preserve_partition table would get files without `_partition`, and
+    sort order, zone maps and Blooms would be dropped."""
+    import os
+    import shutil
+
+    from icedb_spark import Storage
+
+    try:
+        spark.dataSource.register(IceDataSource)
+    except Exception:
+        pass  # already registered in this session
+    t = IceTable(
+        spark, str(tmp_path / "pp"),
+        partition_spec=PartitionSpec(fields=[PartitionField("k", "kind")]),
+        sort_order=["id"], preserve_partition=True,
+    )
+    t.insert(rows=[{"id": 1, "kind": "a", "_partition": "k=a"}])
+    spec = os.path.join(t.path, "_meta", "spec.json")
+    if damage == "truncated":
+        with open(spec, "rb") as f:
+            head = f.read()[:20]
+        with open(spec, "wb") as f:
+            f.write(head)
+    else:
+        os.remove(spec)
+        os.makedirs(spec)
+    logs = Storage(t.path).list("_log")
+    df = spark.createDataFrame(
+        [(2, "a")], "id long, kind string"
+    ).withColumn("_partition", F.lit("k=a"))
+    with pytest.raises(Exception, match="JSONDecodeError|Is a directory"):
+        df.write.format("icedb").mode("append").option(
+            "path", t.path
+        ).save()
+    assert Storage(t.path).list("_log") == logs
+    if damage == "directory":
+        shutil.rmtree(spec)
+
+
 def test_streaming_source_rate_limits_commits_per_batch(spark, tmp_path):
     """max_commits_per_batch=1: a stream facing a 4-commit backlog drains
     it one commit per micro-batch (bounded chunks, the maxFilesPerTrigger

@@ -126,42 +126,6 @@ def test_read_at_max_time_strict_boundary(tmp_path):
     }
 
 
-def test_transient_classifier_recognizes_botocore_shape():
-    from icedb_spark.log import _default_transient
-
-    class FakeClientError(Exception):
-        def __init__(self, status=None, code=None):
-            self.response = {"ResponseMetadata": {"HTTPStatusCode": status}}
-            if code:
-                self.response["Error"] = {"Code": code}
-            super().__init__("boom")
-
-    assert _default_transient(FakeClientError(status=503))
-    assert _default_transient(FakeClientError(status=429))
-    assert not _default_transient(FakeClientError(status=404))
-
-    class SlowDown(Exception):
-        response = {"ResponseMetadata": {}, "Error": {"Code": "SlowDown"}}
-
-    assert _default_transient(SlowDown())
-
-    class Aiohttp(Exception):
-        status = 502
-
-    assert _default_transient(Aiohttp())
-    assert not _default_transient(ValueError("nope"))
-
-    # S3 throttling/timeout errors arrive as HTTP 400 + a throttling
-    # Error.Code — the string must win over the numeric status, or the
-    # primary throttling path never retries
-    assert _default_transient(FakeClientError(status=400, code="SlowDown"))
-    assert _default_transient(FakeClientError(status=400, code="Throttling"))
-    assert _default_transient(FakeClientError(status=400, code="RequestTimeout"))
-    assert _default_transient(FakeClientError(status=500, code="InternalError"))
-    assert not _default_transient(FakeClientError(status=400, code="AccessDenied"))
-    assert not _default_transient(FakeClientError(status=403, code="InvalidToken"))
-
-
 def test_snapshot_parse_cache_hit_and_invalidation(tmp_path):
     """The snapshot parse cache (VERDICT r11 #4): a second fold of an
     unchanged table serves every log from cache WITHOUT re-GETting the

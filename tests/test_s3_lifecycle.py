@@ -532,3 +532,60 @@ def test_s3_row_group_shards_over_the_wire(spark, tmp_path):
         )
         assert df.count() == 4000
         assert df.agg({"id": "sum"}).first()[0] == 4000 * 3999 // 2
+
+
+def test_storage_options_reach_every_executor_path(spark):
+    """``IceTable(storage_options=...)`` configures every object-store
+    client: the driver's storage, the executor writers (insert, merge,
+    DML rewrites, the change-set writer) and the executor readers
+    (``read()``, the DML scans, ``changes_feed``). The server listens on
+    a fresh port that no AWS env var names, so a client that fell back
+    to ambient configuration could not reach it."""
+    from icedb_spark.log import get_log_file_info
+
+    with MiniS3Server() as srv:
+        opts = {
+            "access_key": "test-key",
+            "secret_key": "test-secret",
+            "endpoint_override": f"127.0.0.1:{srv.port}",
+            "scheme": "http",
+            "region": "us-east-1",
+            "allow_bucket_creation": True,
+        }
+        pafs.S3FileSystem(**opts).create_dir("optbkt", recursive=True)
+        t = IceTable(
+            spark,
+            "s3://optbkt/tbl",
+            partition_spec=PartitionSpec(
+                fields=[PartitionField("k", "kind")]
+            ),
+            sort_order=["id"],
+            storage_options=opts,
+        )
+        t.insert(rows=[
+            {"id": i, "kind": "a" if i % 2 else "b", "v": float(i)}
+            for i in range(6)
+        ])
+        t.insert(rows=[{"id": 6, "kind": "a", "v": 6.0}])
+        t0 = get_log_file_info(t.snapshot().log_files[-1])[0]
+
+        def rows():
+            return sorted((r["id"], r["v"]) for r in t.read().collect())
+
+        assert rows() == [(i, float(i)) for i in range(7)]
+        t.delete("id = 0")
+        t.update({"v": "v * 10"}, "id = 1", capture_changes=True)
+        while t.merge(max_file_size=1 << 40, max_file_count=100) is not None:
+            pass
+        want = [(1, 10.0)] + [(i, float(i)) for i in range(2, 7)]
+        assert rows() == want
+        assert len(t.snapshot().alive_files()) == 2  # one per partition
+        feed = sorted(
+            (r["_change_type"], r["id"], r["v"])
+            for r in t.changes_feed(t0).collect()
+        )
+        assert feed == [
+            ("update_postimage", 1, 10.0),
+            ("update_preimage", 1, 1.0),
+        ]
+        assert srv.keys("optbkt")

@@ -1,6 +1,7 @@
-"""Storage backends: POSIX / memory:// / fsspec dispatch, transient-failure
-retry (reference PUT policy, icedb/icedb.py:146-170), separate log/data
-stores (icedb/icedb.py:75-78), and URI table roots end-to-end."""
+"""Storage backends: POSIX / memory:// / pyarrow.fs dispatch, the SDK's
+transient-failure retry under injected S3 faults (reference PUT policy,
+icedb/icedb.py:146-170), separate log/data stores (icedb/icedb.py:75-78),
+and URI table roots end-to-end."""
 
 from __future__ import annotations
 
@@ -16,54 +17,8 @@ from icedb_spark import (
     PartitionSpec,
     Schema,
     Storage,
-    retry_transient,
     storage_for,
 )
-
-
-class _Transient(Exception):
-    def __init__(self, status_code):
-        self.status_code = status_code
-
-
-def test_retry_transient_succeeds_after_blips():
-    calls = {"n": 0}
-    sleeps = []
-
-    def fn():
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise _Transient(503)
-        return "ok"
-
-    assert retry_transient(fn, sleep=sleeps.append) == "ok"
-    assert calls["n"] == 3
-    # linear backoff: 0.3 * attempt
-    assert sleeps == [pytest.approx(0.3), pytest.approx(0.6)]
-
-
-def test_retry_transient_gives_up_after_attempts():
-    calls = {"n": 0}
-
-    def fn():
-        calls["n"] += 1
-        raise _Transient(429)
-
-    with pytest.raises(_Transient):
-        retry_transient(fn, sleep=lambda s: None)
-    assert calls["n"] == 3
-
-
-def test_retry_non_transient_raises_immediately():
-    calls = {"n": 0}
-
-    def fn():
-        calls["n"] += 1
-        raise _Transient(404)
-
-    with pytest.raises(_Transient):
-        retry_transient(fn, sleep=lambda s: None)
-    assert calls["n"] == 1
 
 
 def test_storage_for_dispatch(tmp_path):
@@ -188,15 +143,10 @@ def test_table_with_file_uri_root(spark, tmp_path):
     assert t.read().count() == 4
 
 
-def test_s3_falls_back_to_pyarrow_without_fsspec():
-    """Without fsspec, storage_for('s3://...') falls back to the
-    pyarrow-bundled AWS SDK client (PyArrowFsStorage) instead of failing
-    — tests/test_s3_lifecycle.py drives it end-to-end."""
-    try:
-        import fsspec  # noqa: F401
-        pytest.skip("fsspec installed; fallback does not apply")
-    except ImportError:
-        pass
+def test_storage_for_s3_is_pyarrow():
+    """Every remote scheme dispatches to the one pyarrow.fs backend
+    (PyArrowFsStorage); s3 roots surface as s3a:// for Spark's Hadoop
+    reader. tests/test_s3_lifecycle.py drives it end-to-end."""
     from icedb_spark.log import PyArrowFsStorage
 
     st = storage_for(
@@ -211,175 +161,151 @@ def test_s3_falls_back_to_pyarrow_without_fsspec():
     )
     assert isinstance(st, PyArrowFsStorage)
     assert st.absolute("x") == "s3a://bucket/table/x"
+    with pytest.raises(ValueError, match="s3://"):
+        storage_for("memory://bucket-b", storage_options={"region": "x"})
 
 
-# ------------------------------------------------- fsspec end-to-end + faults
+def test_arrow_clients_are_built_in_one_place():
+    """Every pyarrow.fs client in the engine comes from ``arrow_fs``, so
+    the driver's storage, the executor writers and the executor readers
+    resolve ``storage_options`` and in-filesystem paths identically."""
+    import inspect
+    import pathlib
+
+    import icedb_spark
+    from icedb_spark import log
+
+    pkg = pathlib.Path(icedb_spark.__file__).parent
+    sites = [
+        (str(f.relative_to(pkg)), i)
+        for f in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if "S3FileSystem(" in line or "FileSystem.from_uri(" in line
+    ]
+    body, first = inspect.getsourcelines(log.arrow_fs)
+    inside = [
+        (p, i) for p, i in sites
+        if p == "log.py" and first <= i < first + len(body)
+    ]
+    assert sites == inside
+    assert len(inside) == 2
+
+
+# ---------------------------------------------- s3:// end-to-end + faults
 #
-# fsspec is not installed in this environment, so these tests register a
-# minimal POSIX-backed stand-in module exposing exactly the fsspec method
-# surface FsspecStorage consumes (pipe_file / cat_file / find / rm_file /
-# info / exists). Every DRIVER-side storage operation — log puts/gets/
-# lists, tombstone + vacuum deletes, orphan listing, mtimes — then flows
-# through the real FsspecStorage retry/fs code on BOTH the log and data
-# slots. (Data-file BYTES are written by executors through pyarrow.fs, by
-# design: Storage objects never carry row data.) A `file://` root keeps
-# `absolute()` URIs Spark-readable.
+# tests/mini_s3.py speaks real S3 REST to pyarrow's bundled AWS SDK client
+# and can answer the next requests of one kind with a 503 SlowDown
+# (``fail_next``). The SDK retries every call itself (3 attempts), so
+# these tests watch that retry absorb single blips on both slots and
+# surface a persistent fault. Injected GETs target objects larger than
+# the mock's ~75-byte error body: a 503 on a GET of a smaller object
+# fails in the SDK as a non-retryable INTERNAL_FAILURE.
 
 
-class _Blip(Exception):
-    """503-shaped transient error, as an object store would raise it."""
-
-    status_code = 503
-
-
-class _FakeLocalFS:
-    def __init__(self):
-        import threading
-
-        self.blips_served = 0
-        self._fail_ops = set()  # op names that fail once with a _Blip
-        self._lock = threading.Lock()
-
-    def fail_once(self, op: str) -> None:
-        with self._lock:
-            self._fail_ops.add(op)
-
-    def fail_always(self, op: str) -> None:
-        with self._lock:
-            self._always_fail = getattr(self, "_always_fail", set()) | {op}
-
-    def _maybe_blip(self, op: str) -> None:
-        with self._lock:
-            if op in getattr(self, "_always_fail", ()):
-                self.blips_served += 1
-                raise _Blip()
-            if op in self._fail_ops:
-                self._fail_ops.discard(op)
-                self.blips_served += 1
-                raise _Blip()
-
-    def pipe_file(self, path, data):
-        import os
-
-        self._maybe_blip("pipe_file")
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp-fake"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.rename(tmp, path)
-
-    def cat_file(self, path):
-        self._maybe_blip("cat_file")
-        with open(path, "rb") as f:
-            return f.read()
-
-    def find(self, base, detail=False):
-        import os
-
-        self._maybe_blip("find")
-        out = {}
-        for dirpath, _dirs, files in os.walk(base):
-            for fn in files:
-                p = os.path.join(dirpath, fn)
-                st = os.stat(p)
-                out[p] = {"type": "file", "size": st.st_size, "mtime": st.st_mtime}
-        return out if detail else sorted(out)
-
-    def rm_file(self, path):
-        import os
-
-        self._maybe_blip("rm_file")
-        os.remove(path)
-
-    def info(self, path):
-        import os
-
-        st = os.stat(path)  # FileNotFoundError (an OSError) when absent
-        return {"type": "file", "size": st.st_size, "mtime": st.st_mtime}
-
-    def exists(self, path):
-        import os
-
-        return os.path.exists(path)
+def _s3_opts(srv) -> dict:
+    return {
+        "access_key": "test-key",
+        "secret_key": "test-secret",
+        "endpoint_override": f"127.0.0.1:{srv.port}",
+        "scheme": "http",
+        "region": "us-east-1",
+        "allow_bucket_creation": True,
+    }
 
 
-@pytest.fixture()
-def fake_fsspec(monkeypatch):
-    import sys
-    import types
+def _s3_bucket(srv, bucket: str) -> dict:
+    import pyarrow.fs as pafs
 
-    fs = _FakeLocalFS()
-    mod = types.ModuleType("fsspec")
-    mod.filesystem = lambda protocol, **opts: fs
-    monkeypatch.setitem(sys.modules, "fsspec", mod)
-    return fs
+    opts = _s3_opts(srv)
+    pafs.S3FileSystem(**opts).create_dir(bucket, recursive=True)
+    return opts
 
 
-def test_fsspec_lifecycle_both_slots(spark, tmp_path, fake_fsspec):
-    """Full ice02-style lifecycle with FsspecStorage on BOTH slots (separate
-    log and data roots, the reference's split-client layout) including
-    merge, time travel, tombstone vacuum, and orphan GC — with transient
-    faults injected into log PUT, log GET, and vacuum DELETE, all absorbed
-    by the retry layer."""
-    from icedb_spark.log import FsspecStorage
+def test_s3_lifecycle_absorbs_faults_both_slots(spark):
+    """Full ice02-style lifecycle on s3:// for BOTH slots, the data and
+    the log on two separate S3 endpoints (the reference's split-client
+    layout): insert, fold, merge, time travel, orphan GC and tombstone
+    vacuum — with one injected 503 each into a log PUT (UploadPart), a
+    log GET during a fold, a log LIST and a vacuum DELETE, every one
+    absorbed by the SDK's own retry."""
+    from mini_s3 import MiniS3Server
 
-    root = f"file://{tmp_path}/tbl"
-    t = IceTable(spark, root, partition_spec=SPEC, sort_order=["ts"])
-    t.storage = FsspecStorage(root, backoff_s=0.0)
-    t.log_storage = FsspecStorage(f"file://{tmp_path}/tbl_log", backoff_s=0.0)
+    from icedb_spark.log import PyArrowFsStorage
 
-    fake_fsspec.fail_once("pipe_file")  # first log commit PUT blips
-    t.insert(_rows())
-    t.insert(_rows(base=1686_000_000_100))
-    t.insert(_rows(base=1686_000_000_200))
-    assert fake_fsspec.blips_served == 1
+    with MiniS3Server() as data_srv, MiniS3Server() as log_srv:
+        t = IceTable(
+            spark,
+            "s3://data/tbl",
+            partition_spec=SPEC,
+            sort_order=["ts"],
+            storage_options=_s3_bucket(data_srv, "data"),
+            log_storage=PyArrowFsStorage(
+                "s3://logs/tbl", _s3_bucket(log_srv, "logs")
+            ),
+        )
 
-    fake_fsspec.fail_once("cat_file")  # a log read blips mid-fold
-    assert t.read().count() == 12
-    assert fake_fsspec.blips_served == 2
-    t0 = t.snapshot().log_files[-1]
-    from icedb_spark.log import get_log_file_info
+        log_srv.fail_next("PUT")  # the first log commit's UploadPart
+        t.insert(_rows())
+        t.insert(_rows(base=1686_000_000_100))
+        t.insert(_rows(base=1686_000_000_200))
+        assert log_srv.faults_served == 1
 
-    ts0 = get_log_file_info(t0)[0]
+        IceLogIO.clear_parse_cache()
+        log_srv.fail_next("GET")  # a log read mid-fold
+        assert t.read().count() == 12
+        assert log_srv.faults_served == 2
+        log_srv.fail_next("LIST")  # the fold's log listing
+        t0 = t.snapshot().log_files[-1]
+        assert log_srv.faults_served == 3
+        from icedb_spark.log import get_log_file_info
 
-    while t.merge(max_file_size=1 << 40, max_file_count=100) is not None:
-        pass
-    assert t.read().count() == 12
-    assert t.read(at_ms=ts0).count() == 12  # time travel through fsspec log
+        ts0 = get_log_file_info(t0)[0]
 
-    # orphan GC: a never-committed object on the DATA slot
-    t.storage.put("_data/orphan.parquet", b"garbage")
-    with pytest.warns(UserWarning):
-        deleted, _kept = t.gc_orphans(grace_ms=0)
-    assert deleted == ["_data/orphan.parquet"]
-    assert t.read().count() == 12
+        while t.merge(max_file_size=1 << 40, max_file_count=100) is not None:
+            pass
+        assert t.read().count() == 12
+        assert t.read(at_ms=ts0).count() == 12  # time travel over s3 log
 
-    fake_fsspec.fail_once("rm_file")  # a vacuum delete blips
-    logs_gone, data_gone = t.tombstone_cleanup(min_age_ms=0)
-    assert data_gone and logs_gone
-    assert fake_fsspec.blips_served == 3
-    assert t.read().count() == 12
+        # orphan GC: a never-committed object on the DATA slot
+        t.storage.put("_data/orphan.parquet", b"garbage")
+        with pytest.warns(UserWarning):
+            deleted, _kept = t.gc_orphans(grace_ms=0)
+        assert deleted == ["_data/orphan.parquet"]
+        assert t.read().count() == 12
 
-    # both slots really are fsspec-backed and disjoint
-    assert t.log_storage.list("_log") and t.storage.list("_log") == []
+        data_srv.fail_next("DELETE")  # a vacuum delete
+        logs_gone, data_gone = t.tombstone_cleanup(min_age_ms=0)
+        assert data_gone and logs_gone
+        assert data_srv.faults_served == 1
+        assert t.read().count() == 12
+
+        # both slots really are separate stores
+        assert t.log_storage.list("_log") and t.storage.list("_log") == []
+        assert not any(k.startswith("tbl/_log") for k in data_srv.keys("data"))
 
 
-def test_fsspec_retry_gives_up_on_persistent_fault(tmp_path, fake_fsspec):
-    """The retry budget is finite (3 attempts, matching the reference's
-    policy): a persistent 503 surfaces after exactly `attempts` tries."""
-    from icedb_spark.log import FsspecStorage
+def test_s3_persistent_fault_gives_up_after_three_requests():
+    """The retry budget is finite (3 attempts, the reference's policy):
+    a persistent 503 surfaces as an OSError after exactly 3 UploadPart
+    requests, and nothing is published."""
+    from mini_s3 import MiniS3Server
 
-    st = FsspecStorage(f"file://{tmp_path}/x", attempts=3, backoff_s=0.0)
-    fake_fsspec.fail_always("pipe_file")
-    with pytest.raises(_Blip):
-        st.put("k", b"v")
-    assert fake_fsspec.blips_served == 3
-    assert not st.exists("k")
+    from icedb_spark.log import PyArrowFsStorage
+
+    with MiniS3Server() as srv:
+        st = PyArrowFsStorage("s3://bkt/x", _s3_bucket(srv, "bkt"))
+        srv.requests.clear()
+        srv.fail_next("PUT", 3)
+        with pytest.raises(OSError):
+            st.put("k", b"v" * 1024)
+        assert srv.requests["PUT"] == 3
+        assert srv.faults_served == 3
+        assert not st.exists("k")
 
 
 def test_pyarrow_storage_size_contract_on_missing_key(tmp_path):
     """PyArrowFsStorage.size on a missing key raises FileNotFoundError
-    (contract parity with FsspecStorage), not TypeError from int(None)."""
+    (contract parity with Storage), not TypeError from int(None)."""
     from icedb_spark.log import PyArrowFsStorage
 
     st = PyArrowFsStorage(f"file://{tmp_path}")

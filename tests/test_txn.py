@@ -1052,3 +1052,49 @@ def test_participant_lock_failure_releases_acquired_locks(cat):
     finally:
         cat.table("facts").lock_provider = None
         cat.table("dims").lock_provider = None
+
+
+def test_failed_peer_log_read_aborts_instead_of_reading_disjoint(cat):
+    """A GET error on a committed peer's tagged log during validation
+    must not read as "no overlap": the overlapping second commit raises
+    and the first commit's rows survive, never a lost update. (A peer
+    log that vanished would count as a full hit and abort.)"""
+
+    class FailingPeerLog:
+        def __init__(self, inner, tid):
+            self._inner, self._tid = inner, tid
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+        def get(self, key):
+            if parse_txn_id(key) == self._tid:
+                raise OSError("injected: peer log GET failed")
+            return self._inner.get(key)
+
+    t = cat.table("facts")
+    t.insert([{"bucket": "b", "k": i, "v": 0} for i in range(4)])
+    first = CatalogTransaction(cat, cat._txn_store)
+    first.update("facts", {"v": "10"}, "k = 1")
+    second = CatalogTransaction(cat, cat._txn_store)
+    second.delete("facts", "k = 2")
+    first._done = second._done = True
+    f_intent = first._begin()
+    s_intent = second._begin()  # pins BEFORE first commits
+    f_ts = first._execute()
+    first._validate_and_finalize(
+        f_intent, f_ts, first._publish_rewrites(f_intent)
+    )
+    s_ts = second._execute()  # same-file CoW over the pre-first state
+    s_own = second._publish_rewrites(s_intent)
+    real = t.log_storage
+    t.log_storage = FailingPeerLog(real, first.txn_id)
+    try:
+        with pytest.raises(OSError, match="injected"):
+            second._validate_and_finalize(s_intent, s_ts, s_own)
+    finally:
+        t.log_storage = real
+    assert not cat._txn_store.exists(f"{second.txn_id}.commit.json")
+    cat._txn_vis.refresh()
+    got = sorted((r["k"], r["v"]) for r in t.read().collect())
+    assert got == [(0, 0), (1, 10), (2, 0), (3, 0)]
