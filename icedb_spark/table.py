@@ -429,6 +429,14 @@ def _result_size_exceeded(exc: Py4JJavaError) -> bool:
     return False
 
 
+def _result_size_limit(spark: SparkSession) -> int:
+    """``spark.driver.maxResultSize`` in bytes; 0 means no limit, as in
+    Spark."""
+    return _parse_bytes_conf(
+        spark.conf.get("spark.driver.maxResultSize", "1g"), 1 << 30
+    )
+
+
 def _manifest_markers(manifest, created_ms: int = 0) -> list[FileMarker]:
     """Group-writer manifest rows (dicts or collected Rows shaped like
     ``_MANIFEST_SCHEMA``) as file markers stamped ``created_ms`` — 0 for
@@ -790,7 +798,8 @@ class IceTable:
         without the caller restating the spec — the Iceberg-metadata-file
         analog the reference lacks (its constructor IS the metadata).
         Last writer wins: partition evolution simply records the newest
-        spec. Never fails the constructor (read-only storage is fine)."""
+        spec. A storage error (read-only storage, say) fails only the
+        persist, with a WARNING, never the constructor."""
         doc = self._spec_doc()
         if doc is None:
             return
@@ -801,8 +810,11 @@ class IceTable:
             ):
                 return
             self.log_storage.put(self._SPEC_KEY, payload)
-        except Exception:
-            pass
+        except OSError as exc:
+            _LOG.warning(
+                "could not persist %s under %s: %r",
+                self._SPEC_KEY, self.path, exc,
+            )
 
     @classmethod
     def open(
@@ -1084,11 +1096,13 @@ class IceTable:
 
     def _write_groups(
         self,
-        df: DataFrame,
+        df: Optional[DataFrame],
         *,
         part: Optional[str] = None,
         nbytes: Optional[int] = None,
         splits: int = 1,
+        table: Optional[pa.Table] = None,
+        collect: bool = True,
     ) -> list[FileMarker]:
         """The one data-write path: lay ``df`` out, write one sorted
         Parquet file per ``_PART_COL`` group (per split group when
@@ -1108,20 +1122,29 @@ class IceTable:
         ``spark.driver.maxResultSize``, runs
         ``groupBy(...).applyInArrow(writer)`` on the executors. Any other
         failure propagates; files a failed write left behind are
-        unreferenced, and ``gc_orphans`` collects them."""
-        df, sort_cols = self._apply_layout(df)
+        unreferenced, and ``gc_orphans`` collects them.
+
+        Two private inputs serve a merge (``_rewrite_for_merge``):
+        ``table`` is its sources already read on the driver, written in
+        place of the collect with no DataFrame at all (``df`` is None);
+        ``collect=False`` skips the collect for sources that decoded past
+        ``spark.driver.maxResultSize``, where it could only fail."""
+        if table is None:
+            df, sort_cols = self._apply_layout(df)
+        else:
+            sort_cols = self.sort_order  # a merge reads only un-z-ordered tables
         writer = _make_group_writer(
             self.path, sort_cols, self.compression, self.row_group_size,
             stats_cols=self._stats_cols(),
             bloom_spec=self._bloom_spec(),
             fs_options=self.storage_options,
         )
-        if splits == 1:
+        if table is None and splits == 1 and collect:
             size = nbytes if nbytes is not None else self._estimated_bytes(df)
             ceiling = _LOCAL_FANOUT_BYTES if part is None else _LOCAL_PART_BYTES
             if size is not None and size <= ceiling:
                 try:
-                    tbl = df.toArrow()
+                    table = df.toArrow()
                 except Py4JJavaError as exc:
                     if not _result_size_exceeded(exc):
                         raise
@@ -1130,13 +1153,13 @@ class IceTable:
                         "spark.driver.maxResultSize; using the distributed "
                         "writer", self.path, size, exc_info=exc,
                     )
-                else:
-                    if part is not None:
-                        # appended in Arrow: a literal column in the JVM
-                        # plan slows the collect (measured +40% on 20k rows)
-                        col = pa.array([part] * tbl.num_rows, pa.string())
-                        tbl = tbl.append_column(_PART_COL, col)
-                    return _manifest_markers(_write_arrow_groups(tbl, writer))
+        if table is not None:
+            if part is not None:
+                # appended in Arrow: a literal column in the JVM plan slows
+                # the collect (measured +40% on 20k rows)
+                col = pa.array([part] * table.num_rows, pa.string())
+                table = table.append_column(_PART_COL, col)
+            return _manifest_markers(_write_arrow_groups(table, writer))
         if part is not None:
             df = df.withColumn(_PART_COL, F.lit(part))
         group_cols = [_PART_COL]
@@ -2206,13 +2229,13 @@ class IceTable:
         return int(at_ms)
 
     def tag_ts(self, name: str) -> int:
-        """Resolve a tag to its pinned timestamp; KeyError if absent."""
+        """Resolve a tag to its pinned timestamp; KeyError if absent (any
+        other storage error propagates)."""
         try:
-            return int(
-                self.log_storage.get(f"{self._TAGS_PREFIX}/{name}").decode()
-            )
-        except Exception:
+            raw = self.log_storage.get(f"{self._TAGS_PREFIX}/{name}")
+        except FileNotFoundError:
             raise KeyError(f"no such tag: {name!r}") from None
+        return int(raw.decode())
 
     def tags(self) -> dict[str, int]:
         """All tags, name → pinned timestamp."""
@@ -2405,16 +2428,122 @@ class IceTable:
     def _rewrite_for_merge(
         self, state: LogState, part: str, acc: list[FileMarker]
     ) -> tuple[str, int, dict, Optional[dict]]:
-        """The Spark job half of a merge: rewrite ``acc`` into one file.
+        """The write half of a merge: rewrite ``acc`` into one file.
         Thread-safe (temp-view registration is serialized); commit happens
-        separately so passes can batch many rewrites into one log append."""
-        spark = self.spark
+        separately so passes can batch many rewrites into one log append.
+
+        A PLAIN merge — no custom merge query, no pending delete set to
+        fold, no z-order layout, sources within ``_LOCAL_PART_BYTES`` on
+        disk — starts no Spark job: the driver reads the sources
+        (:meth:`_read_merge_sources`) and writes them with the same group
+        writer, as the reference compacts with in-process DuckDB over an
+        explicit file list (icedb/icedb.py:271-281). Every other merge,
+        and a plain one whose sources decode past
+        ``spark.driver.maxResultSize``, is a Spark job."""
         schema = self.spark_schema(state)
         sets = [
             (ts, p)
             for ts, p in self._mor_sets()
             if any(self._mor_applies(m, ts) for m in acc)
         ]
+        on_disk = sum(m.file_bytes for m in acc)
+        plain = not (sets or self.custom_merge_query or self.zorder_by) and (
+            on_disk <= _LOCAL_PART_BYTES
+        )
+        table = self._read_merge_sources(part, acc, schema) if plain else None
+        if table is not None:
+            out_cols = spark_schema_to_duckdb(schema)
+            written = self._write_groups(None, part=part, table=table)
+        else:
+            out, out_cols = self._merge_dataframe(schema, part, acc, sets)
+            # the input's on-disk bytes are KNOWN from the markers (free); a
+            # custom merge query may expand the batch, so it is sized by its
+            # plan estimate instead. MOR folds only delete rows (output <=
+            # input) and keep the marker bytes. A plain merge here already
+            # decoded past the collect's limit, so it skips the collect.
+            written = self._write_groups(
+                out, part=part,
+                nbytes=None if self.custom_merge_query else on_disk,
+                collect=not plain,
+            )
+        if not written:
+            # a filtering custom merge query can yield ZERO rows for the
+            # partition (TTL-style 'where not expired'), and so can plain
+            # sources that are all empty: no group is written, so write
+            # the empty-but-schema'd parquet ourselves —
+            # the reference's DuckDB COPY does the same — and let the merge
+            # commit normally (sources tombstone, partition stays compacted)
+            import io
+
+            empty = (
+                table.slice(0, 0) if table is not None
+                else out.select(list(out_cols.keys())).limit(0).toArrow()
+            )
+            rel = f"_data/{part}/{uuid.uuid4()}.parquet"
+            buf = io.BytesIO()
+            pq.write_table(empty, buf, compression=self.compression)
+            self.storage.put(rel, buf.getvalue())
+            stats0 = (
+                {self._MOR_STATS_KEY: max(ts for ts, _p in sets)}
+                if sets
+                else None
+            )
+            return rel, len(buf.getvalue()), out_cols, stats0
+        stats = written[0].stats
+        if sets:
+            # record the fold: these rows can never need the applied sets
+            # again (vacuum uses this to prove a set obsolete — the new
+            # marker inherits its sources' created_ms for age semantics,
+            # so created_ms alone cannot)
+            stats = dict(stats or {})
+            stats[self._MOR_STATS_KEY] = max(ts for ts, _p in sets)
+        return written[0].path, written[0].file_bytes, out_cols, stats
+
+    def _read_merge_sources(
+        self, part: str, acc: list[FileMarker], schema: T.StructType
+    ) -> Optional[pa.Table]:
+        """A plain merge's sources as one Arrow table, read on the driver
+        with the executors' reader (``_read_conformed``: missing columns
+        null-seeded, widened types cast, column order fixed,
+        ``storage_options`` honoured). The decoded size is checked file
+        by file against ``spark.driver.maxResultSize`` — the limit the
+        collect this read replaces would hit — so at most one file is
+        decoded past it; past it the read is dropped, a WARNING is
+        logged and None is returned (the caller takes the distributed
+        writer)."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from .datasource import _read_conformed
+
+        limit = _result_size_limit(self.spark)
+        batches: list[pa.RecordBatch] = []
+        decoded = 0
+        for m in acc:
+            for rb in _read_conformed(
+                self.storage.absolute(m.path), schema,
+                storage_options=self.storage_options,
+            ):
+                batches.append(rb)
+                decoded += rb.nbytes
+            if limit and decoded > limit:
+                _LOG.warning(
+                    "driver-local merge of %s partition %r (%d decoded "
+                    "bytes) exceeded spark.driver.maxResultSize; using the "
+                    "distributed writer", self.path, part, decoded,
+                )
+                return None
+        return pa.Table.from_batches(batches, schema=to_arrow_schema(schema))
+
+    def _merge_dataframe(
+        self,
+        schema: T.StructType,
+        part: str,
+        acc: list[FileMarker],
+        sets: list[tuple[int, str]],
+    ) -> tuple[DataFrame, dict]:
+        """A Spark-side merge's output: the sources (with ``sets`` folded
+        in) run through the merge query, plus its output columns."""
+        spark = self.spark
         if sets:
             # fold pending merge-on-read deletes into the rewrite: the new
             # file's created_ms postdates every set, so the rows must be
@@ -2446,44 +2575,7 @@ class IceTable:
         out_cols = spark_schema_to_duckdb(
             T.StructType([f for f in out.schema.fields if f.name != _PART_COL])
         )
-
-        # the input's on-disk bytes are KNOWN from the markers (free); a
-        # custom merge query may expand the batch, so it is sized by its
-        # plan estimate instead. MOR folds only delete rows (output <=
-        # input) and keep the marker bytes.
-        written = self._write_groups(
-            out, part=part,
-            nbytes=None if self.custom_merge_query
-            else sum(m.file_bytes for m in acc),
-        )
-        if not written:
-            # a filtering custom merge query can yield ZERO rows for the
-            # partition (TTL-style 'where not expired'): applyInArrow emits
-            # no group, so write the empty-but-schema'd parquet ourselves —
-            # the reference's DuckDB COPY does the same — and let the merge
-            # commit normally (sources tombstone, partition stays compacted)
-            import io
-
-            empty = out.select(list(out_cols.keys())).limit(0).toArrow()
-            rel = f"_data/{part}/{uuid.uuid4()}.parquet"
-            buf = io.BytesIO()
-            pq.write_table(empty, buf, compression=self.compression)
-            self.storage.put(rel, buf.getvalue())
-            stats0 = (
-                {self._MOR_STATS_KEY: max(ts for ts, _p in sets)}
-                if sets
-                else None
-            )
-            return rel, len(buf.getvalue()), out_cols, stats0
-        stats = written[0].stats
-        if sets:
-            # record the fold: these rows can never need the applied sets
-            # again (vacuum uses this to prove a set obsolete — the new
-            # marker inherits its sources' created_ms for age semantics,
-            # so created_ms alone cannot)
-            stats = dict(stats or {})
-            stats[self._MOR_STATS_KEY] = max(ts for ts, _p in sets)
-        return written[0].path, written[0].file_bytes, out_cols, stats
+        return out, out_cols
 
     def _commit_merge(
         self, state: LogState, rewritten: list
@@ -2493,6 +2585,21 @@ class IceTable:
         timestamp, as the reference does), tombstoned old markers, carried
         untouched markers of the superseded logs, and log tombstones."""
         merge_ms = unique_ms()
+        # A delete set that landed after a rewrite listed the sets is not
+        # folded into it, yet applies to its sources; the new marker,
+        # stamped merge_ms, would escape it and resurrect the rows. Refuse
+        # before anything is committed: a retry folds the set, and
+        # gc_orphans reclaims the files written here.
+        for ts, _p in self._mor_sets(at_ms=merge_ms - 1):
+            for part, acc, _path, _bytes, _cols, stats in rewritten:
+                folded = (stats or {}).get(self._MOR_STATS_KEY) or 0
+                if ts > folded and any(self._mor_applies(m, ts) for m in acc):
+                    raise RuntimeError(
+                        f"merge of {self.path} partition {part!r} raced the "
+                        f"merge-on-read delete set stamped {ts}, which its "
+                        "rewrite did not fold; nothing was committed — "
+                        "retry the merge"
+                    )
         new_markers = [
             FileMarker(
                 path=path, created_ms=merge_ms, file_bytes=nbytes, stats=stats

@@ -3,11 +3,14 @@
 Every write (insert, merge, GDPR rewrite, DML rewrite) either collects to
 one Arrow table and runs the group writer on the driver, or runs the same
 writer in a ``groupBy(...).applyInArrow`` job; the ``format("icedb")``
-writer runs it on executors. These tests pin that the paths are
-interchangeable — identical read-back values, marker stats (zone maps and
-Blooms) and Parquet physical schema — that every write API goes through
-the one helper, and that the local path falls back only on the failure it
-exists for: a collect that outgrows ``spark.driver.maxResultSize``.
+writer runs it on executors. A plain merge reads its sources on the
+driver with pyarrow instead of collecting, and starts no Spark job. These
+tests pin that the paths are interchangeable — identical read-back
+values, marker stats (zone maps and Blooms) and Parquet physical schema —
+that every write API goes through the one helper, which merges stay on
+Spark, and that the local path falls back only on the failure it exists
+for: a collect, or a merge's driver-side read, that outgrows
+``spark.driver.maxResultSize``.
 """
 
 from __future__ import annotations
@@ -46,8 +49,8 @@ def _drain_merge(t):
         merged.append(res)
 
 
-def _two_insert_table(spark, tmp_path, name):
-    t = make(spark, tmp_path, name, bloom_columns=["event_type"])
+def _two_insert_table(spark, tmp_path, name, **kw):
+    t = make(spark, tmp_path, name, bloom_columns=["event_type"], **kw)
     rows = ts_rows()
     t.insert(rows=rows[:30])
     t.insert(rows=rows[30:])
@@ -91,6 +94,39 @@ def _scan_batch(spark, tmp_path):
     return src.read()  # a Parquet scan: estimable, tiny
 
 
+def _wide_table(spark, tmp_path, name):
+    """Two inserts over temporal, decimal and nested columns (with nulls),
+    zone-mapped and Bloom-indexed; the second adds a column, so the first
+    file lacks it and a merge null-seeds it."""
+    t = make(
+        spark, tmp_path, name,
+        stats_columns=["event_id", "ts", "d", "amt", "event_type"],
+        bloom_columns=["event_type", "event_id"],
+    )
+
+    def batch(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id as event_id",
+            "timestamp_seconds(1672531200 + (id % 30) * 259200 + id)"
+            " as ts",
+            "case when id % 2 = 0 then 'a' else 'b' end as event_type",
+            "id + 0.25 as value",
+            "date_add(date'2023-01-01', cast(id as int)) as d",
+            "cast(id * 1.5 as decimal(12,2)) as amt",
+            "case when id % 5 = 0 then null"
+            " else array(cast(id as string), 'x') end as tags",
+            "map('k', cast(id as int), 'n', null) as attrs",
+            "case when id % 7 = 0 then null else named_struct("
+            "'a', cast(nullif(id, 3) as int),"
+            " 'b', nullif(cast(id as string), '4')) end as s",
+        )
+
+    t.insert(df=batch(0, 30))
+    t.insert(df=batch(30, 60).withColumn("extra", F.concat(
+        F.lit("e"), F.col("event_id").cast("string"))))
+    return t
+
+
 CASES = {
     "insert_rows": (
         _setup_empty, lambda spark, tmp, t, local: t.insert(rows=ts_rows())
@@ -100,6 +136,7 @@ CASES = {
         lambda spark, tmp, t, local: t.insert(df=_scan_batch(spark, tmp)),
     ),
     "merge": (_two_insert_table, lambda spark, tmp, t, local: _drain_merge(t)),
+    "merge_wide": (_wide_table, lambda spark, tmp, t, local: _drain_merge(t)),
     "rewrite_partition": (
         _two_insert_table,
         lambda spark, tmp, t, local: t.rewrite_partition(
@@ -161,13 +198,62 @@ def test_local_equals_distributed(spark, tmp_path, monkeypatch, case):
     assert collect_sorted(fast) == collect_sorted(slow)
 
 
+def _count_distributed_writes(monkeypatch, spark) -> list:
+    """Record every ``applyInArrow`` group write (the distributed writer)
+    in the returned list."""
+    calls: list = []
+    grouped = type(spark.range(1).groupBy("id"))
+    orig = grouped.applyInArrow
+
+    def spy(self, *a, **kw):
+        calls.append(1)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(grouped, "applyInArrow", spy)
+    return calls
+
+
 def test_local_merge_falls_back_on_collect_failure(
     spark, tmp_path, monkeypatch, caplog
 ):
-    """A local collect that outgrows spark.driver.maxResultSize falls back
-    to the distributed writer, logs one WARNING carrying the exception,
-    and still produces the merged file."""
+    """A plain merge whose sources decode past spark.driver.maxResultSize
+    drops its driver-side read, logs one WARNING per merged partition and
+    writes on the distributed writer; the markers equal a plain run's."""
+    plain = _two_insert_table(spark, tmp_path, "plain")
+    _drain_merge(plain)
     t = _two_insert_table(spark, tmp_path, "fb")
+    monkeypatch.setattr(table_mod, "_result_size_limit", lambda spark: 1)
+    local = count_local_writes(monkeypatch)
+    distributed = _count_distributed_writes(monkeypatch, spark)
+    with caplog.at_level(logging.WARNING, logger="icedb_spark.table"):
+        merged = _drain_merge(t)
+    assert merged, "merge must still happen via the distributed writer"
+    assert not local
+    assert len(distributed) == len(merged)
+    warned = [r for r in caplog.records if "maxResultSize" in r.getMessage()]
+    assert len(warned) == len(merged)
+    assert all(
+        "driver-local merge of" in r.getMessage()
+        and "exceeded spark.driver.maxResultSize; using the distributed writer"
+        in r.getMessage()
+        for r in warned
+    )
+    for _log, _marker, part, _acc in merged:
+        assert sum(f"partition {part!r}" in r.getMessage() for r in warned) == 1
+    assert _fingerprint(t) == _fingerprint(plain)
+    assert collect_sorted(t) == collect_sorted(plain)
+
+
+def test_spark_side_merge_falls_back_on_collect_failure(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """A Spark-side merge (here: custom merge SQL) still collects; a
+    collect that outgrows spark.driver.maxResultSize falls back to the
+    distributed writer, logs one WARNING carrying the exception, and still
+    produces the merged file."""
+    t = _two_insert_table(
+        spark, tmp_path, "sql", custom_merge_query="select * from source_files"
+    )
     err = result_size_error(spark)
 
     def boom(self):
@@ -190,14 +276,21 @@ def test_local_merge_falls_back_on_collect_failure(
 def test_other_local_write_failure_propagates(spark, tmp_path, monkeypatch, op):
     """Any failure but the result-size one is a real error: it propagates
     and nothing is committed (the distributed writer would hit the same
-    Arrow conversion error, so a fallback could only hide it)."""
+    Arrow conversion or read error, so a fallback could only hide it).
+    An insert fails in its collect; a plain merge in its driver-side
+    read of the sources."""
+    from icedb_spark import datasource
+
     t = _two_insert_table(spark, tmp_path, op)
     before = t.snapshot()
 
-    def boom(self):
+    def boom(*a, **kw):
         raise RuntimeError("simulated Arrow conversion failure")
 
-    monkeypatch.setattr(type(spark.range(1)), "toArrow", boom)
+    if op == "insert":
+        monkeypatch.setattr(type(spark.range(1)), "toArrow", boom)
+    else:
+        monkeypatch.setattr(datasource, "_read_conformed", boom)
     with pytest.raises(RuntimeError, match="simulated"):
         if op == "insert":
             t.insert(rows=ts_rows(6))
@@ -317,6 +410,84 @@ def test_compressible_merge_falls_back_under_tiny_max_result_size(spark, tmp_pat
     assert tiny["src_bytes"] < 1 << 20 < 2 * 12_000 * 200  # compressible
     assert "exceeded spark.driver.maxResultSize" in out["1m"][1]
     assert "exceeded spark.driver.maxResultSize" not in out["1g"][1]
+    # the merge's own fallback, not only the inserts'
+    assert "driver-local merge of" in out["1m"][1]
     assert tiny["stats"] == plain["stats"]
     assert tiny["file_bytes"] == plain["file_bytes"]
     assert tiny["agg"] == plain["agg"] == [24_000, sum(range(24_000)), 24_000 * 200]
+
+
+def _four_partition_table(spark, tmp_path, name, **kw):
+    """Two inserts over four monthly partitions: two files in each."""
+    t = make(spark, tmp_path, name, **kw)
+    rows = [
+        dict(r, ts=r["ts"].replace(month=1 + r["event_id"] % 4))
+        for r in ts_rows(80)
+    ]
+    t.insert(rows=rows[:40])
+    t.insert(rows=rows[40:])
+    return t
+
+
+def _job_ids(spark) -> set:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_plain_merge_all_starts_no_spark_job(spark, tmp_path):
+    """A plain compaction pass reads its sources on the driver: merging
+    four small partitions starts no Spark job."""
+    t = _four_partition_table(spark, tmp_path, "nojob")
+    before = _job_ids(spark)
+    res = t.merge_all(max_file_size=1 << 40, max_file_count=100)
+    assert res is not None and len(res[1]) == 4
+    assert _job_ids(spark) - before == set()
+    assert len(t.snapshot().alive_files()) == 4
+    assert len(collect_sorted(t)) == 80
+
+
+def _merge_path_spies(monkeypatch) -> dict:
+    """Count the driver-side source reads and the Spark-side merge
+    DataFrames built by merges until the monkeypatch is undone."""
+    calls = {"arrow": 0, "spark": 0}
+    orig_read = IceTable._read_merge_sources
+    orig_df = IceTable._merge_dataframe
+
+    def read(self, *a, **kw):
+        calls["arrow"] += 1
+        return orig_read(self, *a, **kw)
+
+    def build(self, *a, **kw):
+        calls["spark"] += 1
+        return orig_df(self, *a, **kw)
+
+    monkeypatch.setattr(IceTable, "_read_merge_sources", read)
+    monkeypatch.setattr(IceTable, "_merge_dataframe", build)
+    return calls
+
+
+@pytest.mark.parametrize(
+    "case", ["plain", "custom_sql", "delete_set", "zorder", "over_ceiling"]
+)
+def test_only_plain_merges_skip_spark(spark, tmp_path, monkeypatch, case):
+    """Custom merge SQL (it needs the ``source_files`` view), a pending
+    delete set to fold, a z-ordered table and sources over the on-disk
+    ceiling keep the Spark-side merge; only a plain merge reads on the
+    driver."""
+    kw = {
+        "custom_sql": {"custom_merge_query": "select * from source_files"},
+        "zorder": {"zorder_by": ["event_id", "value"]},
+    }.get(case, {})
+    t = _two_insert_table(spark, tmp_path, case, **kw)
+    if case == "delete_set":
+        t.delete_where("event_id = 3")
+    if case == "over_ceiling":
+        monkeypatch.setattr(table_mod, "_LOCAL_PART_BYTES", 1)
+    expected = collect_sorted(t)
+    calls = _merge_path_spies(monkeypatch)
+    merged = _drain_merge(t)
+    assert merged
+    if case == "plain":
+        assert calls == {"arrow": len(merged), "spark": 0}
+    else:
+        assert calls == {"arrow": 0, "spark": len(merged)}
+    assert collect_sorted(t) == expected

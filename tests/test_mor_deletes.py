@@ -63,6 +63,47 @@ def test_mor_sets_fold_in_at_merge_and_vacuum_collects(spark, tmp_path):
     assert _ids(t.read()) == [1]
 
 
+def test_merge_refuses_a_delete_set_that_lands_mid_merge(
+    spark, tmp_path, monkeypatch
+):
+    """A delete set stamped after the merge listed the sets, but before
+    its commit, applies to the merged sources yet is not folded into the
+    rewrite; committing would stamp the new file past the set and
+    resurrect its rows. The merge raises, commits nothing, and a retry
+    folds the set."""
+    import random
+
+    rng = random.Random(7)
+    t = _mk(spark, tmp_path)
+    for b in range(3):
+        t.insert(rows=[
+            {"id": b * 50 + i, "kind": "a", "v": rng.random()}
+            for i in range(50)
+        ])
+    before = t.snapshot()
+    orig = IceTable._commit_merge
+
+    def racing_commit(self, state, rewritten):
+        self.delete_where("v > 0.5")
+        return orig(self, state, rewritten)
+
+    monkeypatch.setattr(IceTable, "_commit_merge", racing_commit)
+    with pytest.raises(RuntimeError, match="merge-on-read delete set"):
+        t.merge(max_file_size=1 << 40, max_file_count=100)
+    monkeypatch.undo()
+    after = t.snapshot()
+    assert after.log_files == before.log_files
+    assert t.read().where("v > 0.5").count() == 0
+    kept = t.read().count()
+    assert kept > 0
+    assert t.merge(max_file_size=1 << 40, max_file_count=100) is not None
+    (m,) = t.snapshot().alive_files()
+    ((set_ts, _p),) = t._mor_sets()
+    assert m.stats[t._MOR_STATS_KEY] == set_ts
+    assert t.read().where("v > 0.5").count() == 0
+    assert t.read().count() == kept
+
+
 def test_rewrites_refuse_while_sets_pending(spark, tmp_path):
     t = _mk(spark, tmp_path)
     t.insert(rows=[{"id": 1, "kind": "a", "v": 1.0}])

@@ -701,6 +701,24 @@ def test_merge_with_empty_output_commits(spark, tmp_path):
     state = t.snapshot()
     assert len(state.alive_files()) == 1  # the empty file
 
+    # sources with no rows at all merge on the plain (driver-read) path
+    # into one empty file as well
+    from icedb_spark.log import FileMarker, unique_ms
+
+    (empty,) = state.alive_files()
+    copy = empty.path.replace(".parquet", "-copy.parquet")
+    t.storage.put(copy, t.storage.get(empty.path))
+    t.log_io.append(
+        t.log_storage, 1, state.schema,
+        [FileMarker(copy, unique_ms(), empty.file_bytes)],
+        timestamp_ms=unique_ms(),
+    )
+    plain = make_table(spark, tmp_path)
+    assert plain.merge(max_file_size=1 << 40, max_file_count=100) is not None
+    (merged,) = plain.snapshot().alive_files()
+    assert merged.path not in (empty.path, copy)
+    assert plain.read().count() == 0
+
 
 def test_malformed_range_predicate_raises(spark, tmp_path):
     t = make_table(spark, tmp_path)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import logging
 
 import pytest
 
@@ -56,4 +57,26 @@ def test_python_fn_spec_not_persisted(spark, tmp_path):
         spark, root,
         partition_spec=PartitionSpec(python_fn=lambda r: "p=x"),
     )
+    assert not t.log_storage.exists(t._SPEC_KEY)
+
+
+def test_spec_persist_failure_warns_and_constructs(spark, tmp_path, caplog):
+    """Read-only log storage fails the spec persist, not the constructor:
+    one WARNING carries the storage error."""
+    from icedb_spark.log import Storage
+
+    class ReadOnly(Storage):
+        def put(self, key, data):
+            raise PermissionError(f"read-only: {key}")
+
+    root = str(tmp_path / "ro")
+    with caplog.at_level(logging.WARNING, logger="icedb_spark.table"):
+        t = IceTable(
+            spark, root,
+            partition_spec=PartitionSpec(fields=[PartitionField("k", "kind")]),
+            log_storage=ReadOnly(root),
+        )
+    warned = [r for r in caplog.records if t._SPEC_KEY in r.getMessage()]
+    assert len(warned) == 1
+    assert "read-only: _meta/spec.json" in warned[0].getMessage()
     assert not t.log_storage.exists(t._SPEC_KEY)

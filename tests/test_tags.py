@@ -47,6 +47,28 @@ def test_tag_roundtrip_and_lifecycle(spark, tmp_path):
         _mk(spark, tmp_path, "empty").tag("v1")
 
 
+def test_tag_read_error_is_not_a_missing_tag(spark, tmp_path, monkeypatch):
+    """Only a missing tag key is ``KeyError``; any other storage error on
+    the tag's GET propagates instead of reading as "no such tag"."""
+    t = _mk(spark, tmp_path)
+    t.insert(rows=[{"id": 1, "kind": "a"}])
+    t.tag("v1")
+    orig = t.log_storage.get
+
+    def get(key):
+        if key.startswith(f"{t._TAGS_PREFIX}/"):
+            raise OSError("simulated 503 on the tag GET")
+        return orig(key)
+
+    monkeypatch.setattr(t.log_storage, "get", get)
+    with pytest.raises(OSError, match="simulated"):
+        t.read(tag="v1")
+    monkeypatch.undo()
+    with pytest.raises(KeyError):
+        t.read(tag="v2")
+    assert _ids(t.read(tag="v1")) == [1]
+
+
 def test_vacuum_protects_tagged_snapshot(spark, tmp_path):
     t = _mk(spark, tmp_path)
     t.insert(rows=[{"id": 1, "kind": "a"}])

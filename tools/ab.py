@@ -18,10 +18,15 @@ verdict:
   median, is wider than the bound, so the runs cannot tell — unless
   every run of the change reads better than every run of the parent.
 
+``--claim METRIC`` also checks the gain rule for a claimed improvement
+of that metric: the change wins at least 9 of every 10 pairs (a tie counts
+for neither side) and its median is better than the parent's by more than
+the parent's interquartile spread (q3 - q1).
+
 Every run must report ``correct`` with 0 failed; the summary counts the
 runs that did not. Only ``BENCHMARK.json`` and ``perfbench/`` are read;
 neither is changed. Standard library only. Exits 1 when a metric is
-``WORSE`` or a run failed, else 0.
+``WORSE``, a run failed or a claim does not hold, else 0.
 """
 
 from __future__ import annotations
@@ -80,17 +85,40 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def metric_pairs(runs: list[dict], name: str) -> list[tuple[float, float]]:
+    """``(parent, change)`` values of one metric, one per pair that
+    reported it on both sides."""
+    return [
+        (p["metrics"][name]["value"], c["metrics"][name]["value"])
+        for p, c in ((r["parent"], r["change"]) for r in runs)
+        if name in p.get("metrics", {}) and name in c.get("metrics", {})
+    ]
+
+
+def claim(pairs: list[tuple[float, float]], lower: bool) -> dict:
+    """The gain rule for a claimed improvement: the change wins at least
+    9 of every 10 pairs (ties count for neither side), and its median is
+    better than the parent's by more than the parent's interquartile
+    spread."""
+    won = sum((c < p) if lower else (c > p) for p, c in pairs)
+    pq = quartiles([p for p, _ in pairs])
+    cq = quartiles([c for _, c in pairs])
+    gain = pq[1] - cq[1] if lower else cq[1] - pq[1]
+    spread = pq[2] - pq[0]
+    return {
+        "won": won, "pairs": len(pairs), "gain": gain,
+        "parent_spread": spread,
+        "holds": 10 * won >= 9 * len(pairs) and gain > spread,
+    }
+
+
 def compare(runs: list[dict], spec: list[dict]) -> list[dict]:
     """Per end-to-end metric: both sides' quartiles, pairs won, the
     relative median change in the bad direction, and the verdict."""
     rows = []
     for m in spec:
         name, lower = m["name"], m["better"] == "lower"
-        pairs = [
-            (p["metrics"][name]["value"], c["metrics"][name]["value"])
-            for p, c in ((r["parent"], r["change"]) for r in runs)
-            if name in p.get("metrics", {}) and name in c.get("metrics", {})
-        ]
+        pairs = metric_pairs(runs, name)
         if not pairs:
             continue
         par, chg = [p for p, _ in pairs], [c for _, c in pairs]
@@ -124,10 +152,15 @@ def main(argv=None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--claim", metavar="METRIC",
+                    help="check the gain rule for this end-to-end metric")
     args = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    if args.claim is not None and args.claim not in better:
+        ap.error(f"--claim: {args.claim!r} is not an end-to-end metric")
     seconds = bench["run_seconds"]
     tmp = tempfile.mkdtemp(prefix="ab-parent-")
     try:
@@ -169,7 +202,14 @@ def main(argv=None) -> int:
               f"{r['won']:>3}/{r['pairs']:<2} {r['worse_by']:>+7.3f} "
               f"{r['spread']:>7.3f} {r['bound']:>6.2f}  {r['verdict']}")
     worse = any(r["verdict"] == "WORSE" for r in rows)
-    return 1 if worse or bad_runs else 0
+    held = True
+    if args.claim is not None:
+        c = claim(metric_pairs(runs, args.claim), better[args.claim] == "lower")
+        held = c["holds"]
+        print(f"claim {args.claim}: won {c['won']}/{c['pairs']}, median gain "
+              f"{c['gain']:.4g} vs parent spread {c['parent_spread']:.4g}: "
+              + ("holds" if held else "does NOT hold"))
+    return 1 if worse or bad_runs or not held else 0
 
 
 if __name__ == "__main__":
